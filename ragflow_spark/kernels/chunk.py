@@ -13,28 +13,37 @@ Token counting is a whitespace + BPE-ish regex count (BASELINE round
 instructions): one token per word-ish run, per CJK char, per
 punctuation glyph. Deterministic, dependency-free.
 
-Performance: token counts per chunk are ACCUMULATED while pieces are
+Performance: the interpreter does work per piece and per chunk, never
+per token. Token counts per chunk are ACCUMULATED while pieces are
 merged (counts are additive because cut points never split a token —
-they fall only after punctuation/whitespace or at token ends), so the
-whole text is regex-scanned once via C-level ``findall``, not once per
-piece plus once per final chunk. ``tests/test_properties.py`` pins the
-accumulated-equals-rescanned equivalence.
+they fall only after punctuation/whitespace or at token ends), so each
+piece is counted once, not once per piece plus once per final chunk.
+Counting and splitting both use one pattern, _n_tokens_re(n), that
+matches exactly n tokens in ONE regex match: num_tokens advances
+_COUNT_BLOCK tokens per match, and a piece too large for one chunk (a
+single huge node, t10: ~10^5 tokens) is hard-split by one match per
+chunk, after a single bounded match decides the split is needed at
+all. No Match or str object is built per token. ``tests/test_properties.py`` pins the
+accumulated-equals-rescanned equivalence and checks num_tokens, the
+hard split and the bounded probe against per-token references.
 """
 
 from __future__ import annotations
 
 import re
 from bisect import bisect_left
-from itertools import islice
+from functools import lru_cache
 
 DEFAULT_TOKEN_BUDGET = 256
 
-# word runs | single CJK chars | any other non-space glyph
-_TOKEN_RE = re.compile(
-    r"[A-Za-z0-9_]+(?:'[a-z]+)?"
-    r"|[一-鿿぀-ヿ가-힯]"
-    r"|[^\sA-Za-z0-9_]"
-)
+# word runs (with an apostrophe suffix) | any other non-space char, one
+# token each (a CJK char, a punctuation glyph). The two alternatives
+# start on disjoint chars and the quantifiers are possessive (`++`,
+# `?+`; nothing after them can fail, so findall finds the same tokens
+# as with greedy ones): a token has exactly one way to match, so a
+# repeat of this pattern (_n_tokens_re) can neither split a word run
+# into more tokens nor backtrack at all.
+_TOKEN_RE = re.compile(r"[A-Za-z0-9_]++(?:'[a-z]+)?+|[^\sA-Za-z0-9_]")
 
 # sentence-ish boundaries the naive splitter prefers (reference's
 # delimiter-driven splitting, agent/component/iteration.py:27 pattern,
@@ -45,13 +54,31 @@ _SENT_BOUND_RE = re.compile(r"[\n。；！？!?;.]")
 Span3 = tuple[int, int, int]
 
 
-def num_tokens(s: str) -> int:
-    return len(_TOKEN_RE.findall(s))
+_COUNT_BLOCK = 32  # tokens per regex match in num_tokens
+
+
+def num_tokens(s: str, pos: int = 0) -> int:
+    """Tokens in s[pos:]: one regex match per _COUNT_BLOCK tokens, then
+    one match each for 16, 8, ..., 1 tokens (a binary descent over the
+    remainder) — no Match or str object per token."""
+    n = 0
+    block = _n_tokens_re(_COUNT_BLOCK).match
+    while (m := block(s, pos)) is not None:
+        n += _COUNT_BLOCK
+        pos = m.end()
+    k = _COUNT_BLOCK
+    while k > 1:
+        k >>= 1
+        if (m := _n_tokens_re(k).match(s, pos)) is not None:
+            n += k
+            pos = m.end()
+    return n
 
 
 def tokenize(text: str) -> tuple[list[int], list[int]]:
-    """(starts, ends) offset arrays — used by tests to verify the
-    additive-count invariant; the hot path uses findall counting."""
+    """(starts, ends) offset arrays — the per-token reference tests
+    check num_tokens, the hard split and the additive-count invariant
+    against."""
     starts: list[int] = []
     ends: list[int] = []
     for m in _TOKEN_RE.finditer(text):
@@ -99,16 +126,13 @@ def _spans_for_segment(
     prev_cut = 0
     for cut in _cut_points(seg):
         piece = seg[prev_cut:cut]
-        # Huge piece (t10_huge_node): a BOUNDED probe (steps 2*budget+1
-        # matches at C speed) decides hard-split without a full count —
+        # Huge piece (t10_huge_node): a BOUNDED probe (one match of
+        # 2*budget+1 tokens) decides hard-split without a full count —
         # an exact count of a 500 kB node would be a second full regex
         # scan whose result is never used again after the split.
-        if cut - prev_cut >= _BIG_PIECE_CHARS and (
-            next(
-                islice(_TOKEN_RE.finditer(piece), 2 * budget, 2 * budget + 1),
-                None,
-            )
-            is not None
+        if (
+            cut - prev_cut >= _BIG_PIECE_CHARS
+            and _n_tokens_re(2 * budget + 1).match(piece) is not None
         ):
             # pt > 2*budget exactly; close any open span, then split.
             # (When tok_count > 0 the original close-if-over-budget
@@ -153,26 +177,41 @@ def _spans_for_segment(
 _BIG_PIECE_CHARS = 4096  # pieces above this use the bounded-probe path
 
 
+@lru_cache(maxsize=128)
+def _n_tokens_re(n: int) -> re.Pattern:
+    """Matches exactly `n` tokens (each after its leading whitespace)
+    from the match position, and fails when fewer are left.
+
+    Exact, because each repetition has only one way to match: every
+    non-whitespace char starts a _TOKEN_RE match, so what finditer
+    skips between tokens is exactly the whitespace run `\\s*+` takes,
+    and a _TOKEN_RE match has one way to match (see there). So the
+    match ends where finditer's n-th token ends, in linear time. The
+    possessive `{n}+` only spares the engine its backtracking state.
+    Possessive quantifiers need Python >= 3.11."""
+    if n < 1:  # `{0}` would match empty and never advance
+        raise ValueError(f"token count must be >= 1, got {n}")
+    return re.compile(r"(?:\s*+(?:%s)){%d}+" % (_TOKEN_RE.pattern, n))
+
+
 def _hard_split(piece: str, budget: int) -> list[Span3]:
-    """Cut every `budget`-th token end in ONE pass: islice jumps the
-    match iterator at C speed (no per-token Python body, and no
-    separate full count scan — a 500 kB single node (t10) has ~10^5
-    tokens); only the sub-budget tail is re-counted."""
+    """Cut after every `budget`-th token end, ONE regex match per chunk
+    (a 500 kB single node (t10) has ~10^5 tokens but only ~400 chunks,
+    so no per-token Match object or Python step); only the sub-budget
+    tail is counted. The chunk pattern (_n_tokens_re) ends exactly
+    where finditer's `budget`-th token ends, and fails — rather than
+    splitting a word run to make up the number — when fewer than
+    `budget` tokens are left."""
     spans: list[Span3] = []
     start = 0
-    it = _TOKEN_RE.finditer(piece)
-    while True:
-        m = next(islice(it, budget - 1, budget), None)
-        if m is None:
-            break
+    chunk = _n_tokens_re(budget).match
+    while (m := chunk(piece, start)) is not None:
         spans.append((start, m.end(), budget))
         start = m.end()
     if start < len(piece):
-        # findall(pos=start) avoids copying the suffix; the pattern has
-        # no anchors/lookbehind, so pos semantics equal slicing
-        spans.append(
-            (start, len(piece), len(_TOKEN_RE.findall(piece, start)))
-        )
+        # pos=start avoids copying the suffix; the pattern has no
+        # anchors/lookbehind, so pos semantics equal slicing
+        spans.append((start, len(piece), num_tokens(piece, start)))
     return spans
 
 
@@ -323,7 +362,7 @@ def chunk_spans_with_counts(
     budget: int = DEFAULT_TOKEN_BUDGET,
 ) -> list[Span3]:
     """(char_start, char_end, token_count) per chunk — counts
-    accumulated during the merge (one findall scan of the text
+    accumulated during the merge (one counting scan of the text
     total); a count invalidated by tiling (-1) is recomputed."""
     out = []
     for a, b, c in _spans3(template, text, section_kinds, section_texts, budget):

@@ -608,6 +608,25 @@ _NL_RUN_RE = re.compile(r"\n{3,}")
 _SPACE_NL_RE = re.compile(r" ?\n ?")
 
 
+def _nothing_to_collapse(s: str) -> bool:
+    """True when _WS_RUN_RE provably has no match in `s`: an ASCII
+    string can only match through "  " or an ASCII member of
+    _WS_NONSPACE (\\t \\f \\v \\x1c-\\x1f). Each `in` is a memchr-speed
+    scan: ~20x cheaper than the no-op sub over a huge single node
+    (t10) of single-spaced text, and cheaper on short sections too."""
+    return (
+        s.isascii()
+        and "  " not in s
+        and "\t" not in s
+        and "\f" not in s
+        and "\v" not in s
+        and "\x1c" not in s
+        and "\x1d" not in s
+        and "\x1e" not in s
+        and "\x1f" not in s
+    )
+
+
 def normalize_text(s: str) -> str:
     """FIXTURES.md §5.1: NFC; \\n newlines; collapse runs of non-\\n
     Unicode whitespace to one space; <=2 consecutive newlines; strip
@@ -621,7 +640,8 @@ def normalize_text(s: str) -> str:
     s = unicodedata.normalize("NFC", s)
     if "\r" in s:
         s = s.replace("\r\n", "\n").replace("\r", "\n")
-    s = _WS_RUN_RE.sub(" ", s)
+    if not _nothing_to_collapse(s):
+        s = _WS_RUN_RE.sub(" ", s)
     # most sections are single-line: the two newline regexes can only
     # match when a newline exists at all, and `in` is ~10x cheaper
     # than a no-match regex scan

@@ -1430,6 +1430,8 @@ def fetch_schedule(spark, sf_dir):
 # a span is host-boilerplate when it appears in >= NUM/DEN of the
 # host's documents (integer cross-multiply — no float at the cut)
 BOILER_NUM, BOILER_DEN = 1, 4
+# host_boilerplate_table refuses to collect a table this large
+BOILER_TABLE_CAP = 100_000
 
 
 @register(
@@ -1602,17 +1604,17 @@ def host_boilerplate_table(docs) -> dict[str, frozenset[str]]:
         )
         .select("source", "h")
     )
-    # enforce the bound BEFORE collecting (an assert after the collect
-    # would OOM the driver first and vanishes under python -O —
-    # review fix): count() is a cheap distributed aggregate here
-    n = flagged.count()
-    if n >= 100_000:
+    # the bound is enforced by the collect itself: limit(CAP) never
+    # brings more than CAP rows to the driver, and hitting the cap
+    # means the table is at least that large. One job: a separate
+    # count() would recompute the segmentation and aggregation.
+    rows = flagged.limit(BOILER_TABLE_CAP).collect()
+    if len(rows) >= BOILER_TABLE_CAP:
         raise ValueError(
-            f"boilerplate table unexpectedly large ({n} spans): the "
-            "frequent-span definition should bound it at site-chrome "
-            "size — refusing to collect to the driver"
+            f"boilerplate table unexpectedly large (>= {BOILER_TABLE_CAP} "
+            "spans): the frequent-span definition should bound it at "
+            "site-chrome size — refusing to collect to the driver"
         )
-    rows = flagged.collect()
     table_: dict[str, set] = {}
     for r in rows:
         table_.setdefault(r.source, set()).add(r.h)

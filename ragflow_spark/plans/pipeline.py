@@ -257,7 +257,8 @@ def extract_pages(
 
 
 def chunks_of(extracted: DataFrame) -> DataFrame:
-    """Flat chunks table via posexplode of the nested chunks column."""
+    """Flat chunks table via explode of the nested chunks column (each
+    chunk struct carries its own chunk_id, so no position is needed)."""
     c = extracted.select(
         "url", F.explode("chunks").alias("c")
     )

@@ -39,6 +39,7 @@ EXTRACTED = T.StructType(
         T.StructField("parse_code", T.IntegerType(), False),
         T.StructField("n_sections", T.IntegerType(), False),
         T.StructField("extract_ms", T.DoubleType(), False),
+        T.StructField("bytes_in", T.LongType(), False),
         T.StructField("split_id", T.IntegerType(), False),
         T.StructField("chunks", T.ArrayType(CHUNK), True),
     ]

@@ -58,6 +58,16 @@ def test_extraction_is_zero_shuffle(spark, sf_dir):
     assert "Exchange" not in plan, "extraction must not shuffle the html payload"
 
 
+def test_extract_pages_output_matches_declared_schema(spark, sf_dir):
+    from ragflow_spark import schemas
+    from ragflow_spark.plans.pipeline import assign_splits, extract_pages
+    from ragflow_spark.sources.pages import synthesize_pages
+
+    ex = extract_pages(assign_splits(synthesize_pages(spark, sf_dir), 16, 8, None))
+    # simpleString: names, order and (nested) types; nullability ignored
+    assert ex.schema.simpleString() == schemas.EXTRACTED.simpleString()
+
+
 def test_resume_wave_is_colocated(spark, sf_dir):
     from ragflow_spark.plans.pipeline import assign_splits, extract_pages
     from ragflow_spark.sources.pages import synthesize_pages

@@ -4,6 +4,8 @@ normalization fixpoints. No Spark — pure functions only."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings, strategies as st
 
 from ragflow_spark.kernels.chunk import chunk_naive, num_tokens
@@ -132,6 +134,173 @@ def test_template_span_counts_equal_rescan(template, sections, budget):
     for (a, b, c), nxt in zip(spans, spans[1:] + [(len(text), 0, 0)]):
         assert a < b and b == nxt[0]
         assert c == num_tokens(text[a:b])
+
+
+# Token-boundary stress for the hard split: apostrophe suffix forms
+# (`don't` is one token, `don'T` three), CJK and astral chars, Unicode
+# whitespace between tokens, and sentence bounds that cut pieces.
+_TOKEN_FRAGMENTS = st.sampled_from(
+    ["don't", "don'T", "''", "a'b'c", "it's", "x_9", "word", "中文",
+     "かな", "한", "\U0001F600", "\U00020000", " ", "  ", "\t", "\n",
+     "\xa0", "\u3000", "\u2009", "\x85", "\x1f", ".", "!", ",", "-"]
+)
+TOKEN_TEXTS = st.lists(
+    st.one_of(
+        _TOKEN_FRAGMENTS,
+        st.characters(codec="utf-8", exclude_categories=("Cs",)),
+    ),
+    max_size=300,
+).map("".join)
+
+
+def _over_big_piece(base: str, reps: int, no_bounds: bool) -> str:
+    from ragflow_spark.kernels.chunk import _BIG_PIECE_CHARS, _SENT_BOUND_RE
+
+    if no_bounds:  # one piece longer than _BIG_PIECE_CHARS
+        base = _SENT_BOUND_RE.sub("", base) or "w"
+    return base * (_BIG_PIECE_CHARS // len(base) + reps)
+
+
+# texts past _BIG_PIECE_CHARS, so the bounded-probe branch runs
+LONG_TEXTS = st.builds(
+    _over_big_piece,
+    TOKEN_TEXTS.filter(bool),
+    st.integers(min_value=1, max_value=3),
+    st.booleans(),
+)
+
+
+def _hard_split_reference(piece: str, budget: int):
+    """Cut at every `budget`-th token end of tokenize(); the tail
+    holds the rest."""
+    from ragflow_spark.kernels.chunk import tokenize
+
+    _starts, ends = tokenize(piece)
+    spans, start = [], 0
+    for k in range(budget - 1, len(ends), budget):
+        spans.append((start, ends[k], budget))
+        start = ends[k]
+    if start < len(piece):
+        spans.append((start, len(piece), len(ends) % budget))
+    return spans
+
+
+# the token pattern in its plain greedy form, as the SQL twin
+# (operators/extraction.py _TOKEN_RE_SQL) writes it
+_GREEDY_TOKEN_RE = re.compile(
+    r"[A-Za-z0-9_]+(?:'[a-z]+)?|[一-鿿぀-ヿ가-힯]|[^\sA-Za-z0-9_]"
+)
+
+
+@given(TOKEN_TEXTS)
+@settings(max_examples=300, deadline=None)
+def test_possessive_token_pattern_finds_greedy_tokens(text):
+    from ragflow_spark.kernels.chunk import _TOKEN_RE
+
+    assert [m.span() for m in _TOKEN_RE.finditer(text)] == [
+        m.span() for m in _GREEDY_TOKEN_RE.finditer(text)
+    ]
+
+
+@given(st.one_of(TOKEN_TEXTS, LONG_TEXTS), st.integers(min_value=0, max_value=400))
+@settings(max_examples=300, deadline=None)
+def test_num_tokens_matches_per_token_reference(text, pos):
+    """Block-and-descent counting equals one count per token, from any
+    start position (the hard split's tail counts from a cut)."""
+    from ragflow_spark.kernels.chunk import tokenize
+
+    pos = min(pos, len(text))
+    assert num_tokens(text, pos) == len(tokenize(text[pos:])[0])
+
+
+@given(st.one_of(TOKEN_TEXTS, LONG_TEXTS), st.integers(min_value=1, max_value=64))
+@settings(max_examples=300, deadline=None)
+def test_hard_split_matches_per_token_reference(piece, budget):
+    """One regex match per chunk cuts exactly where counting tokens
+    one by one does."""
+    from ragflow_spark.kernels.chunk import _hard_split
+
+    assert _hard_split(piece, budget) == _hard_split_reference(piece, budget)
+
+
+@st.composite
+def _probe_edge(draw):
+    """One piece over _BIG_PIECE_CHARS holding 2*budget-1 .. 2*budget+2
+    single tokens, spread out by long whitespace runs: the probe's
+    decision boundary (hard split iff more than 2*budget tokens)."""
+    from ragflow_spark.kernels.chunk import _BIG_PIECE_CHARS
+
+    budget = draw(st.integers(min_value=1, max_value=64))
+    n = 2 * budget + draw(st.integers(min_value=-1, max_value=2))
+    words = draw(
+        st.lists(st.sampled_from(["don't", "x_9", "中", "\U0001F600", "-"]),
+                 min_size=n, max_size=n)
+    )
+    gap = draw(st.sampled_from([" ", "\t", "\u3000", "\xa0 "]))
+    sep = gap * (_BIG_PIECE_CHARS // (len(gap) * n) + 1)
+    return sep.join(words), budget
+
+
+@given(
+    st.one_of(
+        st.tuples(LONG_TEXTS, st.integers(min_value=1, max_value=64)),
+        _probe_edge(),
+    )
+)
+@settings(max_examples=150, deadline=None)
+def test_bounded_probe_matches_exact_count_path(case):
+    """The bounded probe for pieces over _BIG_PIECE_CHARS decides the
+    hard split exactly as the full token count does (the probe path
+    disabled by raising the threshold past the text)."""
+    from unittest import mock
+
+    from ragflow_spark.kernels import chunk
+
+    text, budget = case
+    probed = chunk.chunk_spans_with_counts("naive", text, ["p"], [text], budget)
+    with mock.patch.object(chunk, "_BIG_PIECE_CHARS", len(text) + 1):
+        counted = chunk.chunk_spans_with_counts("naive", text, ["p"], [text], budget)
+    assert probed == counted
+
+
+# whitespace that _WS_RUN_RE collapses, plus pure-ASCII single-spaced
+# text where normalize_text's no-collapse fast path fires
+_WS_HEAVY = st.lists(
+    st.sampled_from(
+        list("\t\v\f\x1c\x1d\x1e\x1f\x85\xa0\u3000\n\r") + [" ", "  ", "a", "b", "é"]
+    ),
+    max_size=200,
+).map("".join)
+_ASCII_SINGLE_SPACED = st.lists(
+    st.text(alphabet="abcXYZ019.,'!\n", min_size=1, max_size=10), max_size=40
+).map(" ".join)
+
+
+@given(st.one_of(_WS_HEAVY, _ASCII_SINGLE_SPACED, TEXTS))
+@settings(max_examples=300, deadline=None)
+def test_normalize_fast_path_equals_unconditional_sub(s):
+    from unittest import mock
+
+    from ragflow_spark.kernels import htmlx
+
+    if htmlx._nothing_to_collapse(s):
+        assert htmlx._WS_RUN_RE.search(s) is None
+    with mock.patch.object(htmlx, "_nothing_to_collapse", lambda _s: False):
+        always_sub = htmlx.normalize_text(s)
+    assert normalize_text(s) == always_sub
+
+
+def test_normalize_fast_path_guard_covers_every_ascii_collapse():
+    """The guard declines exactly the ASCII chars _WS_RUN_RE acts on
+    (doubled, so a lone ASCII space is the only one left alone), and
+    fires on single-spaced ASCII."""
+    from ragflow_spark.kernels.htmlx import _WS_RUN_RE, _nothing_to_collapse
+
+    for c in map(chr, range(128)):
+        s = f"a{c}{c}b"
+        assert _nothing_to_collapse(s) == (_WS_RUN_RE.search(s) is None), repr(c)
+    assert _nothing_to_collapse("one two. three\nfour")
+    assert not _nothing_to_collapse("caf\xe9 ok")  # non-ASCII: sub runs
 
 
 # Cross-engine fuzz for the extract_text_hashes_plain VALUE oracle:

@@ -603,3 +603,24 @@ def test_boilerplate_scrub_stream_matches_reference(spark, sf_dir, tmp_path):
             assert got[r.doc_id][1] >= 1  # the banner came out
             assert f"nav {r.source} footer" not in got[r.doc_id][0]
     assert n_banner_docs > 0
+
+
+def test_boilerplate_table_cap_raises_in_one_collect(spark, monkeypatch):
+    """The table's size cap is enforced by the bounded collect itself:
+    a table of exactly CAP spans raises, one span fewer does not."""
+    from ragflow_spark.operators import corpus
+
+    docs = spark.createDataFrame(
+        [
+            (i, f"h{i % 2}", f"nav bar top body words number{i} end")
+            for i in range(8)
+        ],
+        "doc_id long, source string, text string",
+    )
+    n = sum(len(v) for v in corpus.host_boilerplate_table(docs).values())
+    assert n >= 2  # 'nav bar top' and friends, per host
+    monkeypatch.setattr(corpus, "BOILER_TABLE_CAP", n + 1)
+    assert sum(len(v) for v in corpus.host_boilerplate_table(docs).values()) == n
+    monkeypatch.setattr(corpus, "BOILER_TABLE_CAP", n)
+    with pytest.raises(ValueError, match="unexpectedly large"):
+        corpus.host_boilerplate_table(docs)
