@@ -96,7 +96,10 @@ def warm_python_workers(spark, cores: int) -> None:
     concurrent cold imports). On a real cluster executors live for the
     whole 100 TB job, so steady-state throughput — the thing the
     scaling criterion is about — excludes that one-time cost; this
-    pass pays it before the timer starts."""
+    pass pays it before the timer starts. Importing the kernels also
+    imports ``ragflow_spark``, which installs
+    ``deploy.skip_unchanged_zip_rereads`` in each worker, so later
+    tasks stop re-reading every zip directory on sys.path."""
     import pandas as pd
 
     def touch(batches):

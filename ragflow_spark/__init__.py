@@ -17,6 +17,12 @@ capabilities of the 52dev/ragflow reference (see SURVEY.md):
   language, switch.py:90-129 of the reference).
 """
 
+from ragflow_spark.deploy import skip_unchanged_zip_rereads
+
 FIXTURE_VERSION = 1
+
+# runs in every Python worker that unpickles one of our functions: stops
+# the per-task re-read of every zip directory on sys.path (deploy.py)
+skip_unchanged_zip_rereads()
 
 __all__ = ["FIXTURE_VERSION"]

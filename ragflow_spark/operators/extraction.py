@@ -8,8 +8,7 @@ extracted bytes in pure SQL (all routes), chunk_spans_full
 reconstructs the chunker's full span output (template, count, every
 char_start:char_end:token_count triple) the same way, and the
 narrower plain/structured/stats twins stay as driver-history rows.
-Only extract_text_hashes stays rows-only — the byte-STABILITY probe;
-byte-exactness against arbitrary (non-synthesized) inputs is covered
+Byte-exactness against arbitrary (non-synthesized) inputs is covered
 by the pinned golden fixtures in tests/test_golden.py (FIXTURES.md
 §2).
 """
@@ -48,7 +47,8 @@ def extract_pages_stats(spark, sf_dir):
     recomputes the mix arithmetically from the synthesizer's
     doc_id % 20 routing — a real end-to-end check that every page
     lands in the right parser with the right outcome. Chunk/char
-    totals are covered per-url by extract_text_hashes + goldens."""
+    totals are covered per-url by extract_text_hashes_full,
+    chunk_spans_full and the goldens."""
     pages = synthesize_pages(
         spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
     )
@@ -96,8 +96,8 @@ def extract_text_hashes_plain(spark, sf_dir):
     paragraphs -> join with \\n -> md5). This runs the REAL pipeline —
     synthesize -> sniff -> DOM parse -> boilerplate strip -> normalize
     — and pins ~20% of its byte output to a SQL value oracle; the
-    remaining templates stay golden-pinned (tests/test_golden.py) and
-    rows-only in `extract_text_hashes`."""
+    remaining templates are value-pinned by `extract_text_hashes_full`
+    and golden-pinned (tests/test_golden.py)."""
     pages = synthesize_pages(
         spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
     )
@@ -291,8 +291,7 @@ def extract_text_hashes_full(spark, sf_dir):
     plain articles; t=18 single-column PDF with header/footer lines;
     t=19 two-column PDF reassembled in reading order. The narrower
     plain/structured twins (above) stay as the driver-history rows;
-    `extract_text_hashes` below stays rows-only as the byte-STABILITY
-    probe; the chunker's span output gets its own full value oracle in
+    the chunker's span output gets its own full value oracle in
     `chunk_spans_full`. Empty-text branches are pinned at the kernel
     level in tests/test_kernels_html.py."""
     pages = synthesize_pages(
@@ -308,30 +307,6 @@ def extract_text_hashes_full(spark, sf_dir):
             F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
             "parse_code",
         )
-    )
-
-
-def extract_text_hashes(spark, sf_dir):
-    """Byte-stability surface: md5 of every extracted_text. Two runs
-    of this query must hash-match exactly.
-
-    NOT registered as a driver query since round 5: it spent four
-    rounds as the lone `no_oracle` row, and its purpose (byte
-    stability on arbitrary inputs) is strictly dominated by the full
-    value oracle `extract_text_hashes_full` plus the golden fixtures
-    (tests/test_golden.py); kernel-level determinism is pinned by
-    tests/test_properties.py::test_extraction_deterministic_and_total.
-    Kept as a callable for ad-hoc stability sweeps."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    return ex.select(
-        "url",
-        "parse_code",
-        F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        F.size(F.coalesce("chunks", F.array())).alias("n_chunks"),
     )
 
 

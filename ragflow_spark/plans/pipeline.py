@@ -162,10 +162,19 @@ def assign_splits(
                 salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
         else:
             # many hot hosts (huge n_splits): broadcast-join the tiny
-            # host->factor dim instead of a mile-long when-chain
+            # host->factor dim instead of a mile-long when-chain. Built
+            # from pandas so that, with Arrow on (session.get_spark), it
+            # plans as a JVM LocalTableScan; a list of tuples would plan
+            # as Scan ExistingRDD over a PythonRDD, and every action on
+            # the staged frame would first run a Python job to build the
+            # broadcast. No literal map either: Spark scans map keys
+            # linearly per row.
             spark = pages.sparkSession
             dim = spark.createDataFrame(
-                sorted(factors.items()), "hh_host string, hh_factor int"
+                pd.DataFrame(
+                    sorted(factors.items()), columns=["hh_host", "hh_factor"]
+                ),
+                "hh_host string, hh_factor int",
             )
             pages = pages.join(
                 F.broadcast(dim), host == F.col("hh_host"), "left"

@@ -59,6 +59,41 @@ def test_salting_spreads_hot_host(spark, pages):
     assert n_splits_of_hot([SKEWED_HOST], 8) > 1
 
 
+def test_many_hot_hosts_join_matches_when_chain(spark, pages):
+    """Above 32 hot hosts `assign_splits` broadcast-joins a host->factor
+    table instead of building a when-chain. It must give every row the
+    split a when-chain gives, and the table must be a JVM
+    LocalTableScan: a Python-RDD-backed relation would run a Python job
+    before every action on the staged frame."""
+    from ragflow_spark.plans.pipeline import assign_splits, extract_pages, host_of
+    from ragflow_spark.sources.pages import SKEWED_HOST
+
+    # 40 hosts in the corpus's naming scheme; some own no page here
+    hosts = [SKEWED_HOST] + [f"site{i:02d}.example.org" for i in range(39)]
+    factors = {h: 2 + i % 7 for i, h in enumerate(hosts)}
+
+    host = host_of(F.col("url"))
+    salt_n = F.lit(1)
+    for h, f in sorted(factors.items()):
+        salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
+    ref = F.pmod(
+        F.xxhash64(host) + F.pmod(F.xxhash64(F.col("url")), salt_n), F.lit(16)
+    ).cast("int")
+    want = {r["url"]: r["s"] for r in pages.select("url", ref.alias("s")).collect()}
+
+    staged = assign_splits(pages, n_splits=16, hot_hosts=factors)
+    assert staged.columns == pages.columns + ["split_id"]
+    got = {r["url"]: r["split_id"] for r in staged.select("url", "split_id").collect()}
+    assert got == want
+    assert len(set(got.values())) > 1
+
+    extracted = extract_pages(staged)
+    assert extracted.count() == len(want)
+    plan = extracted._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
+
+
 def test_kill_resume_byte_identical(spark, pages, tmp_path):
     """Run killed mid-way, then resumed, must equal a single-shot run
     byte-for-byte; the resume must not redo completed waves."""
