@@ -378,7 +378,6 @@ def chunk_spans_with_counts(
 def chunk_naive(
     text: str,
     budget: int = DEFAULT_TOKEN_BUDGET,
-    tok=None,  # retained for API compat; counting no longer needs it
 ) -> list[tuple[int, int]]:
     """Flat token-budget chunking over the whole text."""
     return [(a, b) for a, b, _c in _tile3(
@@ -437,7 +436,6 @@ def chunk_spans(
     section_kinds: list[str],
     section_texts: list[str],
     budget: int = DEFAULT_TOKEN_BUDGET,
-    tok=None,  # retained for API compat
 ) -> list[tuple[int, int]]:
     return [
         (a, b)

@@ -6,8 +6,8 @@ documents.text, so the byte surface is value-oracle-able after all:
 extract_text_hashes_full reconstructs the md5 of every page's
 extracted bytes in pure SQL (all routes), chunk_spans_full
 reconstructs the chunker's full span output (template, count, every
-char_start:char_end:token_count triple) the same way, and the
-narrower plain/structured/stats twins stay as driver-history rows.
+char_start:char_end:token_count triple) the same way, and
+extract_pages_stats checks the per-route parse outcome mix.
 Byte-exactness against arbitrary (non-synthesized) inputs is covered
 by the pinned golden fixtures in tests/test_golden.py (FIXTURES.md
 §2).
@@ -19,11 +19,20 @@ from pyspark.sql import functions as F
 
 from ragflow_spark.kernels.sniff import CODE_EMPTY_PAYLOAD, CODE_OK
 from ragflow_spark.operators.registry import register
-from ragflow_spark.plans.pipeline import (
-    assign_splits,
-    extract_pages,
-)
+from ragflow_spark.plans.pipeline import assign_splits, extract_pages
 from ragflow_spark.sources.pages import synthesize_pages
+
+
+def _extracted_pages(spark, sf_dir):
+    """The real pipeline over pages synthesized from documents.parquet
+    (synthesize -> assign splits -> extract), with the synthesizer's
+    doc_id parsed back out of each url for the oracles to join on."""
+    pages = synthesize_pages(
+        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
+    )
+    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
+    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
+    return extract_pages(staged).withColumn("doc_id", doc_id)
 
 
 @register(
@@ -49,145 +58,9 @@ def extract_pages_stats(spark, sf_dir):
     lands in the right parser with the right outcome. Chunk/char
     totals are covered per-url by extract_text_hashes_full,
     chunk_spans_full and the goldens."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
+    ex = _extracted_pages(spark, sf_dir)
     return ex.groupBy("content_type", "parse_status", "parse_code").agg(
         F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-@register(
-    "extract_text_hashes_plain",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, text, str_split(text, ' ') AS words FROM documents
-      WHERE doc_id % 20 IN (14, 15, 16, 17)
-    ), p AS (
-      SELECT doc_id, text, words, len(words) AS n,
-             greatest(8, len(words) // 6) AS per
-      FROM w
-    ), paras AS (
-      SELECT doc_id,
-        -- real empty signal: str_split('', ' ') is [''] so n is never
-        -- 0; all-whitespace text is the case Python's split() maps to
-        -- [] -> 'empty document body' (ADVICE r3). Otherwise assumes
-        -- the synthesizer's non-empty single-space-separated contract.
-        CASE WHEN length(trim(text)) = 0 THEN ['empty document body'] ELSE
-          list_transform(
-            range(least(6, cast(ceil(n * 1.0 / per) AS INT))),
-            i -> array_to_string(words[i * per + 1 : (i + 1) * per], ' ')
-          ) END AS ps
-      FROM p
-    )
-    SELECT doc_id, md5(array_to_string(ps, chr(10))) AS text_md5 FROM paras
-    """,
-)
-def extract_text_hashes_plain(spark, sf_dir):
-    """VALUE oracle for a byte-level extraction subset: the plain
-    article templates (doc_id % 20 in 14..17, sources/pages.py:149-151
-    — header + <article> paragraphs + footer, no entity/charset/
-    malformed variation) extract to exactly the newline-joined
-    paragraph regrouping of documents.text, so the md5 of the
-    extracted bytes is reconstructible in pure SQL (str_split ->
-    _paragraphs regrouping: per = max(8, n_words // 6), first 6
-    paragraphs -> join with \\n -> md5). This runs the REAL pipeline —
-    synthesize -> sniff -> DOM parse -> boilerplate strip -> normalize
-    — and pins ~20% of its byte output to a SQL value oracle; the
-    remaining templates are value-pinned by `extract_text_hashes_full`
-    and golden-pinned (tests/test_golden.py)."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return (
-        ex.withColumn("doc_id", doc_id)
-        .filter((F.col("doc_id") % 20).isin(14, 15, 16, 17))
-        .select(
-            "doc_id",
-            F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        )
-    )
-
-
-@register(
-    "extract_text_hashes_structured",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, text, str_split(text, ' ') AS words FROM documents
-      WHERE doc_id % 20 IN (11, 12)
-    ), p AS (
-      SELECT doc_id, text, words, len(words) AS n,
-             greatest(8, len(words) // 6) AS per
-      FROM w
-    ), paras AS (
-      SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN ['empty document body'] ELSE
-          list_transform(
-            range(least(6, cast(ceil(n * 1.0 / per) AS INT))),
-            i -> array_to_string(words[i * per + 1 : (i + 1) * per], ' ')
-          ) END AS ps
-      FROM p
-    ), book AS (
-      SELECT doc_id,
-             'Book ' || doc_id || chr(10) || array_to_string(
-               list_transform(
-                 range(len(ps)),
-                 i -> 'Chapter ' || (i + 1) || chr(10) || ps[i + 1]
-               ), chr(10)) AS t
-      FROM paras WHERE doc_id % 20 = 11
-    ), paper AS (
-      SELECT doc_id,
-             'Paper ' || doc_id || chr(10) || 'Abstract' || chr(10) || ps[1]
-             || chr(10)
-             || CASE WHEN len(ps) > 2 THEN array_to_string(
-                  list_transform(
-                    range(len(ps) - 2),
-                    i -> (i + 1) || '. Section' || chr(10) || ps[i + 2]
-                  ), chr(10)) || chr(10) ELSE '' END
-             -- rtrim: the 80-char cut can land on a space, which the
-             -- kernel's whitespace normalization strips
-             || 'References' || chr(10) || '[1] '
-             || rtrim(substr(ps[len(ps)], 1, 80)) AS t
-      FROM paras WHERE doc_id % 20 = 12
-    )
-    SELECT doc_id, md5(t) AS text_md5 FROM book
-    UNION ALL
-    SELECT doc_id, md5(t) AS text_md5 FROM paper
-    """,
-)
-def extract_text_hashes_structured(spark, sf_dir):
-    """Second partial VALUE oracle for byte-level extraction (r3
-    verdict item #6): the heading/book template (doc_id % 20 == 11,
-    sources/pages.py:133-137 — h1 + per-paragraph h2 chapters) and the
-    paper template (== 12, pages.py:138-146 — h1/Abstract/numbered
-    sections/References with the last paragraph truncated to 80 chars)
-    reduce to pure relational string assembly over documents.text, so
-    their extracted bytes are SQL-reconstructible just like the plain
-    routes. Together with extract_text_hashes_plain this pins ~30% of
-    the byte surface to value oracles; the residue (entity/charset/
-    malformed/whitespace/huge-node/table routes 0-10, 13 and the PDF
-    routes 18-19) intentionally stays golden-pinned: those branches
-    exist precisely because their outputs are NOT naive functions of
-    the source text (charset transcoding, entity decode, tag
-    recovery)."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return (
-        ex.withColumn("doc_id", doc_id)
-        .filter((F.col("doc_id") % 20).isin(11, 12))
-        .select(
-            "doc_id",
-            F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-        )
     )
 
 
@@ -289,24 +162,14 @@ def extract_text_hashes_full(spark, sf_dir):
     huge single text node; t=11/12 heading/paper structure; t=13
     NFD->NFC normalization (oracle embeds the composed form); t=14-17
     plain articles; t=18 single-column PDF with header/footer lines;
-    t=19 two-column PDF reassembled in reading order. The narrower
-    plain/structured twins (above) stay as the driver-history rows;
-    the chunker's span output gets its own full value oracle in
-    `chunk_spans_full`. Empty-text branches are pinned at the kernel
-    level in tests/test_kernels_html.py."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return (
-        ex.withColumn("doc_id", doc_id)
-        .select(
-            "doc_id",
-            F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
-            "parse_code",
-        )
+    t=19 two-column PDF reassembled in reading order. The chunker's
+    span output gets its own full value oracle in `chunk_spans_full`.
+    Empty-text branches are pinned at the kernel level in
+    tests/test_kernels_html.py."""
+    return _extracted_pages(spark, sf_dir).select(
+        "doc_id",
+        F.md5(F.coalesce("extracted_text", F.lit(""))).alias("text_md5"),
+        "parse_code",
     )
 
 
@@ -442,13 +305,7 @@ def chunk_spans_full(spark, sf_dir):
     contract (sentence-punctuated text exercising the greedy
     sentence merge), which tests/test_golden.py and
     tests/test_properties.py pin."""
-    pages = synthesize_pages(
-        spark, sf_dir, n_partitions=spark.sparkContext.defaultParallelism
-    )
-    staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=None)
-    ex = extract_pages(staged)
-    doc_id = F.regexp_extract("url", r"doc-(\d+)$", 1).cast("bigint")
-    return ex.withColumn("doc_id", doc_id).select(
+    return _extracted_pages(spark, sf_dir).select(
         "doc_id",
         F.size(F.coalesce("chunks", F.array())).alias("n_chunks"),
         F.coalesce(

@@ -9,157 +9,56 @@ the last ulp of a float aggregate); timestamps are rendered as
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from collections.abc import Callable
+from pathlib import Path
 from urllib.parse import urlparse
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
 
-# The correctness driver records verdicts for only the first
-# DRIVER_WINDOW queries() entries (r3: 57 registered, 50 checked, so 7
-# tail queries got no driver verdict). The exposed order is therefore
-# managed: queries with no driver verdict yet (never checked, or new
-# this round) go FIRST; long-stable queries that have been driver-green
-# in >=2 consecutive rounds rotate to the tail, where falling outside
-# the window costs the least signal.
+# The correctness driver checks only the first DRIVER_WINDOW entries of
+# queries() per round and commits its verdicts to the repo root as
+# CORRECTNESS_r<N>.json ({name: {rows_match, schema_match, hash_match,
+# err, ...}}). driver_order() reads them back so each round's window
+# goes to the queries that need a verdict most.
 DRIVER_WINDOW = 50
+VERDICT_DIR = Path(__file__).resolve().parents[2]
+_VERDICT_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-# Round-5 window: new queries first (never driver-checked), then
-# everything whose last driver verdict was r3 (rotated outside r4's
-# window) — steady state is a verdict at least every other round, so
-# the r3-last-green set MUST be inside r5's window. Queries checked
-# green in r4 may sit out one round.
-PRIORITY_HEAD = [
-    # round-5 fourth-wave additions (never driver-checked). These
-    # displace top_n_limit / rename_projection / contains_filter from
-    # the head: the three most trivial single-operator plans (a limit,
-    # a projection, a filter), unchanged since round 1, r3
-    # driver-green, and still covered every round by the in-repo
-    # replica (tests/driver_sim.py + the sf0.1 parity sweep) — the
-    # cheapest verdicts to spend on first-exposure checks of three
-    # new operators.
-    # Round-5 fifth-wave additions (never driver-checked); these
-    # displace sql_passthrough / error_as_row / union_dedup /
-    # template_interpolation — the four most trivial remaining
-    # r3-green plans (a spark.sql passthrough, a union-with-literal, a
-    # unionByName+distinct, a string-functions projection), all still
-    # replica-covered every round — for the same first-exposure
-    # reason.
-    # Round-5 sixth-wave additions (never driver-checked). With these
-    # nine the head reaches 59, so the LAST nine head entries —
-    # argmax_count / intersect_active_segments / lang_id /
-    # multirow_fold / quality_score / split_explode /
-    # switch_predicates / token_count / top_revenue_orders, all
-    # r3-driver-green single-shuffle plans, all replica-covered every
-    # round (driver_sim + the sf0.1 parity sweep) — fall outside the
-    # 50-entry driver window; the same recorded
-    # first-exposure-over-trivial-recheck trade as the fourth and
-    # fifth waves.
-    "bm25_topk",
-    "zorder_layout_plan",
-    "neardup_containment",
-    "posting_compress_stats",
-    "sq8_encode_stats",
-    "best_passage_snippets",
-    "maxscore_prune_audit",
-    "host_boilerplate_stats",
-    "epoch_shuffle_plan",
-    "ann_pq_topk",
-    "pq_encode_stats",
-    "dsir_importance_stats",
-    "ann_ivfpq_topk",
-    "hll_cardinality",
-    "anchor_text_stats",
-    "fetch_schedule",
-    # round-5 additions (never driver-checked)
-    "semdedup",
-    "classifier_filter_stats",
-    "minhash_decontaminate",
-    "ngram_heavy_hitters",
-    "ivf_kmeans_refine",
-    "dataset_shard_manifest",
-    "corpus_overlap_matrix",
-    "bpe_merge_induction",
-    "bpe_encode_stats",
-    "crawl_snapshot_diff",
-    "link_pagerank",
-    "inverted_index_stats",
-    "robots_fetch_filter",
-    "quality_filter_agreement",
-    "compaction_plan",
-    "snapshot_retention_plan",
-    "link_degree_profile",
-    "dedup_substring",
-    "dedup_substring_trim",
-    "pack_sequences_sharded",
-    "quality_resample",
-    # changed in round 5 (broadcast/literal gates + derived offsets) —
-    # must be re-verified by the driver this round
-    "training_corpus_manifest",
-    "decontaminate_stats",
-    "segment_dedup",
-    # single-green (r3 only) — VERDICT r4 item 2: re-verify first
-    "topk_per_group",
-    "hybrid_retrieval_topk",
-    "ann_ivf_topk_bigk",
-    # r3-last-green similarity set
-    "cite_insertion",
-    "neardup_embedding",
-    "ann_ivf_topk",
-    "cosine_topk",
-    "ann_lsh_bucketed",
-    "ann_query_topk",
-    # r3-last-green relational/textops tail
-    "anti_join_customers",
-    "argmax_count",
-    "intersect_active_segments",
-    "lang_id",
-    "multirow_fold",
-    "quality_score",
-    "split_explode",
-    "switch_predicates",
-    "token_count",
-    "top_revenue_orders",
-]
 
-# Queries driver-green in 2+ consecutive rounds (r1/r2 through r4) and
-# untouched since; listed most-expendable first. The r4-first-green
-# additions stay in the mid section so as many as fit get a second
-# verdict this round.
-STABLE_TAIL = [
-    "q1_pricing_summary",
-    "revenue_by_nation",
-    "percentiles_by_source",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "neardup_jaccard",
-    "dedup_simhash",
-    "windowed_event_counts",
-    "sessionize",
-    "history_window",
-    "rollup_revenue",
-    "hopping_event_counts",
-    "session_window_counts",
-    "pivot_event_values",
-    "asof_last_login",
-    "cube_event_stats",
-    "extract_pages_stats",
-    "extract_text_hashes_plain",
-    "media_metadata",
-    "image_thumbnail_stats",
-    "frame_sample_checksum",
-    "template_render_full",
-    "dedup_components",
-]
+def _green(verdict) -> bool:
+    checks = ("rows_match", "schema_match", "hash_match")
+    return (
+        isinstance(verdict, dict)
+        and all(verdict.get(k) is True for k in checks)
+        and verdict.get("err") is None
+    )
+
+
+def last_verdicts() -> dict[str, tuple[bool, int]]:
+    """name -> (green, round) of its latest verdict in VERDICT_DIR."""
+    rounds = []
+    for path in VERDICT_DIR.glob("CORRECTNESS_r*.json"):
+        m = _VERDICT_FILE.fullmatch(path.name)
+        if m:
+            rounds.append((int(m.group(1)), path))
+    last = {}
+    for rnd, path in sorted(rounds):
+        for name, verdict in json.loads(path.read_text()).items():
+            last[name] = (_green(verdict), rnd)
+    return last
 
 
 def driver_order() -> list[str]:
-    """Registry names in driver-exposure order (see DRIVER_WINDOW)."""
-    head = [n for n in PRIORITY_HEAD if n in QUERIES]
-    tail = [n for n in STABLE_TAIL if n in QUERIES and n not in head]
-    mid = [n for n in QUERIES if n not in head and n not in tail]
-    return head + mid + list(reversed(tail))
+    """Registry names in driver-exposure order: never-checked and red
+    queries first, then green ones oldest verdict first. Sort key is
+    (last verdict green, its round); no verdict = (False, 0). Ties keep
+    registration order, and names no longer registered are ignored."""
+    last = last_verdicts()
+    return sorted(QUERIES, key=lambda n: last.get(n, (False, 0)))
 
 
 def register(name: str, oracle: str | None = None):

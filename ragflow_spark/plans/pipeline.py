@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ragflow_spark.kernels.chunk import DEFAULT_TOKEN_BUDGET
 from ragflow_spark.kernels.extract import extract_document
+from ragflow_spark.schemas import EXTRACTED
 
 DEFAULT_N_SPLITS = 64
 DEFAULT_SALT_FACTOR = 8
@@ -70,14 +71,6 @@ def resolve_hot_host_sample(
         return sample  # explicit rate or None (exact)
     est = int(pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     return HOT_HOST_SAMPLE_RATE if est > auto_threshold_bytes else None
-
-EXTRACTED_SCHEMA = (
-    "url string, warc_ts timestamp, content_type string, "
-    "extracted_text string, parse_status string, parse_code int, "
-    "n_sections int, extract_ms double, bytes_in bigint, split_id int, "
-    "chunks array<struct<chunk_id:int,template:string,chunk_text:string,"
-    "char_start:int,char_end:int,token_count:int>>"
-)
 
 
 def host_of(col):
@@ -261,7 +254,7 @@ def extract_pages(
     if n_partitions:
         df = df.repartition(n_partitions, "split_id")
     return df.select("url", "warc_ts", "html", "split_id").mapInPandas(
-        _extract_batches(budget), schema=EXTRACTED_SCHEMA
+        _extract_batches(budget), schema=EXTRACTED
     )
 
 

@@ -29,9 +29,12 @@ CHUNK = T.StructType(
     ]
 )
 
+# The row format extract_pages returns (its mapInPandas schema). Spark
+# enforces non-nullability at run time, so url stays nullable: malformed
+# jsonl lines arrive as null-url pages and must leave as coded rows.
 EXTRACTED = T.StructType(
     [
-        T.StructField("url", T.StringType(), False),
+        T.StructField("url", T.StringType(), True),
         T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("content_type", T.StringType(), False),
         T.StructField("extracted_text", T.StringType(), True),

@@ -64,3 +64,20 @@ def test_jsonl_edge_values_round_trip(spark, tmp_path):
     )
     assert back["https://a.example/null-html"] == (None, dt.datetime(2024, 5, 1))
     assert back["https://a.example/empty-html"] == (b"", dt.datetime(2024, 5, 1))
+
+
+def test_null_url_page_becomes_coded_row(spark):
+    """A malformed jsonl line reaches the pipeline as a null-url,
+    null-html page. The declared output schema must accept it, so it
+    leaves as one coded failure row, not a task failure."""
+    from ragflow_spark.kernels.sniff import CODE_EMPTY_PAYLOAD
+    from ragflow_spark.plans.pipeline import assign_splits, extract_pages
+
+    pages = spark.createDataFrame(
+        [(None, None, None, None, None)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    rows = extract_pages(assign_splits(pages, 8, 4, None)).collect()
+    assert [(r.url, r.parse_status, r.parse_code) for r in rows] == [
+        (None, "failed", CODE_EMPTY_PAYLOAD)
+    ]

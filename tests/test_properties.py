@@ -101,7 +101,7 @@ def test_bisect_token_counts_equal_rescan(text, budget):
     from ragflow_spark.kernels.chunk import count_tokens_between, tokenize
 
     tok = tokenize(text)
-    for a, b in chunk_naive(text, budget, tok=tok):
+    for a, b in chunk_naive(text, budget):
         assert count_tokens_between(tok[0], a, b) == num_tokens(text[a:b])
 
 
@@ -303,7 +303,9 @@ def test_normalize_fast_path_guard_covers_every_ascii_collapse():
     assert not _nothing_to_collapse("caf\xe9 ok")  # non-ASCII: sub runs
 
 
-# Cross-engine fuzz for the extract_text_hashes_plain VALUE oracle:
+# Cross-engine fuzz for the paragraph regrouping in
+# operators/extraction.py _ROUTES_CTES, the shared base of the
+# extract_text_hashes_full and chunk_spans_full VALUE oracles:
 # the SQL paragraph regrouping (per = max(8, n//6), first 6 paras,
 # 1-based list slicing, ceil counts) must equal python _paragraphs for
 # ANY word count — the corpus only exercises a few lengths. Domain =
