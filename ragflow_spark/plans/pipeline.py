@@ -50,6 +50,9 @@ HOT_HOST_SAMPLE_RATE = 0.01
 # crawl shard is TBs (sampling is mandatory there); test/golden inputs
 # are MBs (exact mode keeps them cheap AND deterministic to inspect)
 HOT_HOST_AUTO_THRESHOLD_BYTES = 1 << 30
+# most salted hosts inlined as plan literals; above it assign_splits
+# broadcast-joins a host->factor table so the plan size stays bounded
+HOT_HOST_INLINE_MAX = 256
 
 _HOST_RE = r"^[a-z]+://([^/]+)"
 
@@ -140,22 +143,50 @@ def assign_splits(
     `compute_hot_hosts` (size-proportional — a host owning 30% of a
     10^12-page crawl needs hundreds of salt buckets, not 8).
     Salting only moves rows between splits; extraction output is
-    salt-invariant (tests/test_resume_salt.py)."""
+    salt-invariant (tests/test_resume_salt.py).
+
+    Up to HOT_HOST_INLINE_MAX salted hosts, the salt factor is one
+    inline CASE with a `hex(host) IN (...)` list per distinct factor,
+    so the plan stays scan -> project (no join, no extra Spark job
+    per action). Each row pays one hash-set membership test per
+    distinct factor, whatever the host count: a factor f from
+    `compute_hot_hosts(n_splits=n)` means a page share above (f-1)/n,
+    and shares sum to at most 1, so there are at most sqrt(2 * n)
+    distinct factors (11 at 64 splits). The gate bounds only the
+    plan size: plan literals must not grow with the corpus."""
     host = host_of(F.col("url"))
     base = F.xxhash64(host)
-    if hot_hosts:
-        if isinstance(hot_hosts, dict):
-            factors = hot_hosts
-        else:
-            factors = {h: salt_factor for h in hot_hosts}
-        factors = {h: max(1, int(f)) for h, f in factors.items()}
-        if len(factors) <= 32:
-            salt_n = F.lit(1)
+    if isinstance(hot_hosts, dict):
+        factors = hot_hosts
+    else:
+        factors = {h: salt_factor for h in hot_hosts or ()}
+    # factor-1 hosts need no branch: every other host gets 1 anyway
+    factors = {h: int(f) for h, f in factors.items() if int(f) > 1}
+    if not factors:
+        keyed = base
+    else:
+        if len(factors) <= HOT_HOST_INLINE_MAX:
+            # hex of the UTF-8 bytes: Python's .hex() matches Spark's
+            # hex(string), and [0-9A-F] needs no escaping in SQL text.
+            # One F.expr costs O(1) py4j round trips; Column.isin or a
+            # when-chain cost ~3 per host.
+            by_factor: dict[int, list[str]] = {}
             for h, f in sorted(factors.items()):
-                salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
+                by_factor.setdefault(f, []).append(
+                    "'" + h.encode("utf-8").hex().upper() + "'"
+                )
+            pages = pages.withColumn("hh_hex", F.hex(host))
+            salt_n = F.expr(
+                "CASE "
+                + " ".join(
+                    f"WHEN hh_hex IN ({', '.join(lits)}) THEN {f}"
+                    for f, lits in sorted(by_factor.items())
+                )
+                + " ELSE 1 END"
+            )
         else:
-            # many hot hosts (huge n_splits): broadcast-join the tiny
-            # host->factor dim instead of a mile-long when-chain. Built
+            # plan literals must not grow with scale: past the inline
+            # gate, broadcast-join the tiny host->factor dim. Built
             # from pandas so that, with Arrow on (session.get_spark), it
             # plans as a JVM LocalTableScan; a list of tuples would plan
             # as Scan ExistingRDD over a PythonRDD, and every action on
@@ -173,14 +204,11 @@ def assign_splits(
                 F.broadcast(dim), host == F.col("hh_host"), "left"
             )
             salt_n = F.coalesce(F.col("hh_factor"), F.lit(1))
-        salt = F.pmod(F.xxhash64(F.col("url")), salt_n)
-        keyed = base + salt
-    else:
-        keyed = base
+        keyed = base + F.pmod(F.xxhash64(F.col("url")), salt_n)
     out = pages.withColumn(
         "split_id", F.pmod(keyed, F.lit(n_splits)).cast("int")
     )
-    return out.drop("hh_host", "hh_factor")
+    return out.drop("hh_hex", "hh_host", "hh_factor")
 
 
 def _extract_batches(budget: int):

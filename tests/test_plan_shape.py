@@ -48,14 +48,51 @@ def test_contains_filter_pushdown_and_pruning(spark, sf_dir, ops):
     assert "PushedFilters: [IsNotNull(text)" in plan
 
 
+def _forty_hot_hosts() -> dict:
+    from ragflow_spark.sources.pages import SKEWED_HOST
+
+    hosts = [SKEWED_HOST] + [f"site{i:02d}.example.org" for i in range(39)]
+    return {h: 2 + i % 7 for i, h in enumerate(hosts)}
+
+
 def test_extraction_is_zero_shuffle(spark, sf_dir):
+    from ragflow_spark.plans.pipeline import (
+        assign_splits,
+        compute_hot_hosts,
+        extract_pages,
+    )
+    from ragflow_spark.sources.pages import synthesize_pages
+
+    pages = synthesize_pages(spark, sf_dir)
+    hot = compute_hot_hosts(pages, n_splits=16)
+    assert hot
+    for hot_hosts in (None, hot, _forty_hot_hosts()):
+        ex = extract_pages(assign_splits(pages, 16, 8, hot_hosts))
+        plan = plan_of(ex)
+        assert "Exchange" not in plan, "extraction must not shuffle the html payload"
+
+
+def test_hot_host_salting_runs_no_extra_job(spark, sf_dir):
+    """Salting hot hosts (below the inline gate) must not add a Spark
+    job to the extraction action, e.g. one that builds a broadcast."""
     from ragflow_spark.plans.pipeline import assign_splits, extract_pages
     from ragflow_spark.sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, sf_dir)
-    ex = extract_pages(assign_splits(pages, 16, 8, None))
-    plan = plan_of(ex)
-    assert "Exchange" not in plan, "extraction must not shuffle the html payload"
+    sc = spark.sparkContext
+
+    def n_jobs(hot_hosts, group):
+        sc.setJobGroup(group, group)
+        try:
+            extract_pages(assign_splits(pages, 16, hot_hosts=hot_hosts)).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = n_jobs(None, "salt-jobs-plain")
+    assert plain > 0
+    assert n_jobs(_forty_hot_hosts(), "salt-jobs-hot") == plain
 
 
 def test_extract_pages_output_matches_declared_schema(spark, sf_dir):

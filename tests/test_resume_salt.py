@@ -59,39 +59,90 @@ def test_salting_spreads_hot_host(spark, pages):
     assert n_splits_of_hot([SKEWED_HOST], 8) > 1
 
 
+def _when_chain_split_id(factors: dict):
+    """Reference split_id over 16 splits: one `when` per hot host."""
+    from ragflow_spark.plans.pipeline import host_of
+
+    host = host_of(F.col("url"))
+    salt_n = F.lit(1)
+    for h, f in sorted(factors.items()):
+        salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
+    return F.pmod(
+        F.xxhash64(host) + F.pmod(F.xxhash64(F.col("url")), salt_n),
+        F.lit(16),
+    ).cast("int")
+
+
+def _assert_splits_match_when_chain(df, factors: dict) -> None:
+    from ragflow_spark.plans.pipeline import assign_splits
+
+    ref = _when_chain_split_id(factors)
+    want = {r["url"]: r["s"] for r in df.select("url", ref.alias("s")).collect()}
+    staged = assign_splits(df, n_splits=16, hot_hosts=factors)
+    assert staged.columns == df.columns + ["split_id"]
+    got = {r["url"]: r["split_id"] for r in staged.select("url", "split_id").collect()}
+    assert got == want
+    assert len(set(got.values())) > 1
+
+
+def _extraction_plan(pages, factors: dict) -> str:
+    from ragflow_spark.plans.pipeline import assign_splits, extract_pages
+
+    extracted = extract_pages(assign_splits(pages, n_splits=16, hot_hosts=factors))
+    assert extracted.count() == pages.count()
+    return extracted._jdf.queryExecution().executedPlan().toString()
+
+
 def test_many_hot_hosts_join_matches_when_chain(spark, pages):
-    """Above 32 hot hosts `assign_splits` broadcast-joins a host->factor
-    table instead of building a when-chain. It must give every row the
-    split a when-chain gives, and the table must be a JVM
-    LocalTableScan: a Python-RDD-backed relation would run a Python job
-    before every action on the staged frame."""
-    from ragflow_spark.plans.pipeline import assign_splits, extract_pages, host_of
+    """40 hot hosts with 7 distinct factors: `assign_splits` must give
+    every row the split a when-chain gives, with the factors inline in
+    the plan (one hex IN list per factor), so the extraction plan has
+    no join, no broadcast and no driver-side relation that an action
+    would first have to build or ship."""
     from ragflow_spark.sources.pages import SKEWED_HOST
 
     # 40 hosts in the corpus's naming scheme; some own no page here
     hosts = [SKEWED_HOST] + [f"site{i:02d}.example.org" for i in range(39)]
     factors = {h: 2 + i % 7 for i, h in enumerate(hosts)}
 
-    host = host_of(F.col("url"))
-    salt_n = F.lit(1)
-    for h, f in sorted(factors.items()):
-        salt_n = F.when(host == h, F.lit(f)).otherwise(salt_n)
-    ref = F.pmod(
-        F.xxhash64(host) + F.pmod(F.xxhash64(F.col("url")), salt_n), F.lit(16)
-    ).cast("int")
-    want = {r["url"]: r["s"] for r in pages.select("url", ref.alias("s")).collect()}
+    _assert_splits_match_when_chain(pages, factors)
+    plan = _extraction_plan(pages, factors)
+    for node in ("Join", "BroadcastExchange", "LocalTableScan", "Scan ExistingRDD"):
+        assert node not in plan
 
-    staged = assign_splits(pages, n_splits=16, hot_hosts=factors)
-    assert staged.columns == pages.columns + ["split_id"]
-    got = {r["url"]: r["split_id"] for r in staged.select("url", "split_id").collect()}
-    assert got == want
-    assert len(set(got.values())) > 1
 
-    extracted = extract_pages(staged)
-    assert extracted.count() == len(want)
-    plan = extracted._jdf.queryExecution().executedPlan().toString()
+def test_hot_hosts_above_inline_gate_join_matches_when_chain(spark, pages):
+    """Past HOT_HOST_INLINE_MAX hosts `assign_splits` broadcast-joins a
+    host->factor table instead of inlining the literals. It must still
+    match the when-chain, and the table must be a JVM LocalTableScan:
+    a Python-RDD-backed relation would run a Python job before every
+    action on the staged frame."""
+    from ragflow_spark.plans.pipeline import HOT_HOST_INLINE_MAX, host_of
+
+    corpus = sorted(
+        r["h"] for r in pages.select(host_of(F.col("url")).alias("h")).distinct().collect()
+    )
+    hosts = [f"h{i:04d}.example.net" for i in range(HOT_HOST_INLINE_MAX + 1)] + corpus
+    factors = {h: 2 + i % 7 for i, h in enumerate(hosts)}
+
+    _assert_splits_match_when_chain(pages, factors)
+    plan = _extraction_plan(pages, factors)
     assert "LocalTableScan" in plan
     assert "Scan ExistingRDD" not in plan
+
+
+def test_hot_host_names_needing_sql_escapes_match_when_chain(spark):
+    """Hosts are inlined as hex literals, so quotes, backslashes, LIKE
+    wildcards, non-ASCII and the empty host (urls the host pattern does
+    not match) salt exactly as the when-chain does."""
+    import pandas as pd
+
+    factors = {"a'b.org": 3, "c\\d.org": 4, "50%off.org": 5, "münchen.de": 6, "": 7}
+    urls = [f"http://{h}/p{i}" for h in factors for i in range(8)]
+    urls += [f"http://other.org/p{i}" for i in range(8)] + ["not-a-url", None]
+    df = spark.createDataFrame(pd.DataFrame({"url": urls}), "url string")
+
+    _assert_splits_match_when_chain(df, factors)
 
 
 def test_kill_resume_byte_identical(spark, pages, tmp_path):
