@@ -60,7 +60,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from ragflow_spark.sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, "/root/testdata/sf0.001")
-    hot = compute_hot_hosts(pages, sample="auto")
+    hot = compute_hot_hosts(pages, n_splits=32, sample="auto")
     staged = assign_splits(pages, n_splits=32, salt_factor=8, hot_hosts=hot)
     ex = extract_pages(staged)
     return ex.select(

@@ -1,19 +1,26 @@
 #!/usr/bin/env python3
 """Bench harness (driver contract).
 
-Runs the flagship extraction pipeline plus headline registry queries at
+Runs the flagship extraction pipeline plus every registry query at
 ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) and prints ONE bounded JSON line (``stdout_line``)::
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"extract": sec, ...}, "sf": 0.1,
-     "docs_per_sec": ..., "mb_per_sec": ...,
-     "steal_pct": ..., "calib_efficiency": ..., "bracket_clean": bool}
+    {"metric": "...", "value": <total sec>, "unit": "sec", "sf": 0.1,
+     "cores": 4, "reps": 3, "docs_per_sec": ..., "mb_per_sec": ...,
+     "steal_pct": ..., "calib_efficiency": ..., "bracket_clean": bool,
+     "queries": {"extract": sec, <HEADLINE_QUERIES>: sec},
+     "n_regressions": ..., "regressions": [<= 10 names]}
+
+The full record — every per-query wall and ``baseline_ratios`` — goes
+to ``.bench/last_bench.json``. Baselines live in ``BENCH/baseline.json``
+under ``"<cores>/<sf>/<tile>"`` keys (``load_baseline``/``record``);
+a run compares against its own key when that key exists.
 
 Every run self-certifies its ambient bracket (bench_ambient.py):
 /proc/stat steal percentage over the timed section, N-way spin
 calibrations BEFORE AND AFTER (windows close mid-run on this VM with
-zero steal accounting), and — when committed baselines apply — the
+zero steal accounting), and — when a baseline applies — the
 board-median ratio (no code change slows 50+ diverse plans uniformly;
 a board-wide shift is the host). When any signal is dirty, >1.5x
 baseline excursions are reported under `regressions_unattributable`
@@ -25,11 +32,11 @@ from the driver's ``documents.parquet`` (sources/pages.py) and cached
 as parquet under ``.bench/`` so the timed job is the real workload —
 parquet scan -> split assignment -> vectorized extract — not payload
 synthesis. ``SPARK_GRAFT_BENCH_REPEAT`` tiles the documents table for
-more load (default 96 -> ~480k pages at sf0.1, enough that per-doc
-kernel CPU dominates fixed job overhead at local[32]).
+more load (default 96 -> ~480k pages at sf0.1).
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-SPARK_GRAFT_BENCH_REPEAT, SPARK_GRAFT_BENCH_SKIP_QUERIES=1 (extraction
+SPARK_GRAFT_BENCH_REPEAT, SPARK_GRAFT_BENCH_TILE,
+SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_BENCH_SKIP_QUERIES=1 (extraction
 only — used by bench_scaling.py).
 """
 
@@ -44,12 +51,22 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+BASELINE_PATH = os.path.join(REPO, "BENCH", "baseline.json")
+# the stdout line's scalar fields, and its cap on names per regression
+# list; .bench/last_bench.json keeps everything
+STDOUT_KEYS = (
+    "metric", "value", "unit", "sf", "cores", "reps",
+    "extract_docs", "extract_ok", "extract_mb_in", "docs_per_sec", "mb_per_sec",
+    "steal_pct", "calib_efficiency", "calib_before_after",
+    "board_ratio_median", "bracket_clean",
+)
+STDOUT_NAMES_MAX = 10
 
 # Headline registry queries (one per operator family). The JSON
 # "value" field sums extract + these, keeping the headline metric
 # comparable across rounds; EVERY other registry query is also timed
-# and reported in "queries" so per-query regressions are detectable
-# against the table in BENCH/BASELINE.md (±30% ambient VM noise on
+# and kept in .bench/last_bench.json so per-query regressions are
+# detectable against BENCH/baseline.json (±30% ambient VM noise on
 # this box — treat >1.5x as a real regression, see CLAUDE.md).
 HEADLINE_QUERIES = [
     "q1_pricing_summary",
@@ -59,6 +76,8 @@ HEADLINE_QUERIES = [
     "sessionize",
     "lang_id",
 ]
+# the walls summed into "value", and the only ones on the stdout line
+HEADLINE = ("extract", *HEADLINE_QUERIES)
 
 
 def _noop_write(df) -> None:
@@ -66,26 +85,43 @@ def _noop_write(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def load_baseline() -> dict[str, float]:
-    """Per-query min-of-6 baselines from BENCH/BASELINE.md (the
-    '## Per-query wall times' table), so each bench run can report its
-    own ratio-vs-baseline and the 1.5x regression rule is evaluable
-    per round without a separate analysis step."""
-    import re
-
+def _baselines() -> dict:
     try:
-        text = open(os.path.join(REPO, "BENCH", "BASELINE.md")).read()
-    except OSError:
+        with open(BASELINE_PATH) as f:
+            return json.load(f)
+    except FileNotFoundError:
         return {}
-    parts = text.split("## Per-query wall times", 1)
-    if len(parts) < 2:
-        return {}
-    return {
-        name: float(v)
-        for name, v in re.findall(
-            r"\| ([a-z0-9_]+) \| ([0-9.]+)", parts[1]
-        )
-    }
+
+
+def load_baseline(cores: int, sf, tile: int) -> dict[str, float]:
+    """Per-query min walls recorded for this (cores, sf, tile), or {}."""
+    return _baselines().get("queries", {}).get(f"{cores}/{sf}/{tile}", {})
+
+
+def record(section: str, key: str, value) -> None:
+    """Set ``baseline.json[section][key] = value``, atomically."""
+    data = _baselines()
+    data.setdefault(section, {})[key] = value
+    tmp = BASELINE_PATH + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(data, f, indent=1, sort_keys=True)
+        f.write("\n")
+    os.replace(tmp, BASELINE_PATH)
+
+
+def stdout_line(full: dict) -> str:
+    """The bounded contract line for a full bench record: headline,
+    extract stats, bracket, the headline query walls, and at most
+    STDOUT_NAMES_MAX names per regression list."""
+    line = {k: full[k] for k in STDOUT_KEYS if k in full}
+    line["queries"] = {k: v for k, v in full["queries"].items() if k in HEADLINE}
+    if "regressions" in full:
+        lists = ("regressions", "regressions_unattributable")
+        line["n_regressions"] = sum(len(full.get(k, ())) for k in lists)
+        for k in lists:
+            if k in full:
+                line[k] = full[k][:STDOUT_NAMES_MAX]
+    return json.dumps(line)
 
 
 def warm_python_workers(spark, cores: int) -> None:
@@ -177,7 +213,7 @@ def bench_extraction(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     repeat = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "96"))
     # text_tile for the PRIMARY timed extraction (default 1 = the tiny
     # driver-corpus pages; bench_scaling sets it to CC-realistic sizes
@@ -186,7 +222,7 @@ def main() -> None:
     skip_queries = os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES") == "1"
     # per-query minimum over >=3 in-process repetitions: identical runs
     # vary +-30% from ambient VM load (BENCH/BASELINE.md), so a single
-    # wall is not comparable to the committed min-of-6 baselines
+    # wall is not comparable to the committed min baselines
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
     from bench_ambient import (
@@ -201,7 +237,7 @@ def main() -> None:
     # any Spark work, so the JSON line carries host-contamination
     # evidence (this VM hits multi-hour hypervisor steal storms that
     # are otherwise indistinguishable from 4x code regressions —
-    # BENCH/BASELINE.md ambient log, VERDICT r4 item 1)
+    # BENCH/BASELINE.md ambient rules)
     calib = spin_calibration(cores)
     ticks_start = read_cpu_ticks()
 
@@ -215,20 +251,6 @@ def main() -> None:
     ]
     ext = min(ext_runs, key=lambda e: e["wall_s"])
     timings["extract"] = round(ext["wall_s"], 3)
-
-    # optional realistic-page-size axis: SPARK_GRAFT_BENCH_FAT=K tiles
-    # each doc's text xK (~K*1.4 kB pages), repeat scaled down 4x
-    fat = int(os.environ.get("SPARK_GRAFT_BENCH_FAT", "0"))
-    fat_stats = None
-    if fat > 1:
-        fat_runs = [
-            bench_extraction(
-                spark, sf_dir, max(1, repeat // 4), cores, text_tile=fat
-            )
-            for _ in range(reps)
-        ]
-        fat_stats = min(fat_runs, key=lambda e: e["wall_s"])
-        timings["extract_fat"] = round(fat_stats["wall_s"], 3)
 
     if not skip_queries:
         import ragflow_spark.operators as ops
@@ -259,50 +281,33 @@ def main() -> None:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    headline = ["extract", "extract_fat"] + HEADLINE_QUERIES
-    result = {
+    full = {
         "metric": "headline_suite_wall",
-        "value": round(sum(v for k, v in timings.items() if k in headline), 3),
+        "value": round(sum(v for k, v in timings.items() if k in HEADLINE), 3),
         "unit": "sec",
-        "queries": timings,
         "sf": sf_val,
         "cores": cores,
+        "reps": reps,
         "extract_docs": ext["docs"],
         "extract_ok": ext["ok"],
         "extract_mb_in": round(ext["bytes_in"] / 1e6, 2),
         "docs_per_sec": round(ext["docs_per_sec"], 1),
         "mb_per_sec": round(ext["mb_per_sec"], 2),
+        # ambient self-certification: a dirty bracket means walls in
+        # this record measure the host's hour, not the code
+        # (see bench_ambient.py)
+        "steal_pct": run_steal,
+        "calib_efficiency": calib_eff,
+        "calib_before_after": [calib["efficiency"], calib_after["efficiency"]],
+        "queries": timings,
     }
-    result["reps"] = reps
-    # ambient self-certification: a dirty bracket means walls in this
-    # line measure the host's hour, not the code (see bench_ambient.py)
-    result["steal_pct"] = run_steal
-    result["calib_efficiency"] = calib_eff
-    result["calib_before_after"] = [
-        calib["efficiency"],
-        calib_after["efficiency"],
-    ]
-    if fat_stats:
-        result["fat_pages"] = {
-            "text_tile": fat,
-            "docs": fat_stats["docs"],
-            "mb_in": round(fat_stats["bytes_in"] / 1e6, 1),
-            "docs_per_sec": round(fat_stats["docs_per_sec"], 1),
-            "mb_per_sec": round(fat_stats["mb_per_sec"], 2),
-        }
-    # the committed baselines are sf0.1/local[32]: ratios at any other
-    # scale would compare fixed overhead, not engine speed
-    baseline = load_baseline() if sf_val == 0.1 and cores == 32 else {}
-    full = dict(result)
+    baseline = load_baseline(cores, sf_val, tile)
     if baseline:
         ratios = {
             k: round(v / baseline[k], 2)
             for k, v in timings.items()
             if k in baseline and baseline[k] > 0
         }
-        # per-query ratios go to the file only: r3's stdout JSON grew
-        # past the driver's tail-capture window and parsed as null —
-        # stdout carries just the headline + the regression names
         full["baseline_ratios"] = ratios
         # third ambient signal: the BOARD ratio. A code change moves
         # specific queries; no single change slows 50+ diverse plans
@@ -310,24 +315,17 @@ def main() -> None:
         # host running in a slow mode the CPU probes missed (measured
         # here: a bracket that read clean at both ends while every
         # query ran ~1.4x). Attribution is suppressed in that state.
-        board = (
-            statistics.median(ratios.values()) if len(ratios) >= 10 else None
-        )
-        if board is not None:
-            result["board_ratio_median"] = full["board_ratio_median"] = board
-            clean = clean and board <= 1.3
+        if len(ratios) >= 10:
+            full["board_ratio_median"] = statistics.median(ratios.values())
+            clean = clean and full["board_ratio_median"] <= 1.3
         over = sorted(k for k, r in ratios.items() if r > 1.5)
-        if clean:
-            result["regressions"] = full["regressions"] = over
-        else:
-            # dirty bracket: raw walls and ratios stay (in the file),
-            # but >1.5x excursions are NOT attributable to the code —
-            # round 4's driver bench flagged 54 phantom regressions
-            # from a steal storm
-            result["regressions"] = full["regressions"] = []
-            result["regressions_unattributable"] = over
+        # dirty bracket: raw walls and ratios stay, but >1.5x
+        # excursions are NOT attributable to the code — round 4's
+        # full bench flagged 54 phantom regressions from a steal storm
+        full["regressions"] = over if clean else []
+        if not clean:
             full["regressions_unattributable"] = over
-    result["bracket_clean"] = full["bracket_clean"] = clean
+    full["bracket_clean"] = clean
     os.makedirs(os.path.join(REPO, ".bench"), exist_ok=True)
     with open(os.path.join(REPO, ".bench", "last_bench.json"), "w") as f:
         json.dump(full, f, indent=1)
@@ -335,7 +333,7 @@ def main() -> None:
     # (or interleaved with) the contract line; JSON is the final line
     spark.stop()
     sys.stdout.flush()
-    print(json.dumps(result), flush=True)
+    print(stdout_line(full), flush=True)
 
 
 if __name__ == "__main__":

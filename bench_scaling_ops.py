@@ -21,6 +21,9 @@ both levels — crushes the ratio (measured: 0.18-0.52 "efficiency" at
 1x, pure floor artifact). Even amplified, any residual fixed cost
 still UNDERSTATES efficiency, so the published numbers are floors,
 not points.
+
+Records the summary under ``scaling_ops`` in BENCH/baseline.json and
+prints it as one JSON line.
 """
 
 from __future__ import annotations
@@ -30,9 +33,12 @@ import os
 import subprocess
 import sys
 
+from bench import record
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-LEVELS = (8, 32)
+CPUS = len(os.sched_getaffinity(0))
+LEVELS = (max(1, CPUS // 4), CPUS)
 RUNS = 3
 # amplify the corpus so per-task work dominates fixed per-action costs
 # (BENCH ambient note: after kernel speedups, keep the scaling workload
@@ -180,39 +186,11 @@ def main() -> None:
     eff = {
         q: round((mins[lo][q] / mins[hi][q]) / (hi / lo), 3) for q in QUERIES
     }
-    block = [
-        "",
-        "## Operator-shape scaling (pinned local[8] vs local[32], "
-        "interleaved, min-based)",
-        "",
-        f"The north rule's N -> 4N criterion applied to the four main",
-        f"operator plan shapes over an {AMPLIFY}x-amplified sf0.1 corpus",
-        f"({AMPLIFY} tagged replicas, ~{AMPLIFY * 5000} docs — sized so",
-        "per-task work dominates fixed per-action planning/codegen",
-        "costs; the extraction block above covers the map-only stage).",
-        "Residual fixed costs hit both levels equally, so each",
-        "efficiency remains a floor, not a point estimate.",
-        "",
-        "| query | T_8 min (s) | T_32 min (s) | efficiency |",
-        "|---|---|---|---|",
-    ]
-    for q in QUERIES:
-        block.append(
-            f"| {q} | {mins[lo][q]} | {mins[hi][q]} | {eff[q]} |"
-        )
-    block += [
-        "",
-        f"Ambient bracket (worst child per level): local[8] steal "
-        f"{brackets[lo]['steal_pct']}% / calib "
-        f"{brackets[lo]['calib_efficiency']}, local[32] steal "
-        f"{brackets[hi]['steal_pct']}% / calib "
-        f"{brackets[hi]['calib_efficiency']}.",
-        "",
-    ]
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    with open(path, "a") as f:
-        f.write("\n".join(block))
-    print(json.dumps({"mins": mins, "efficiency": eff, "brackets": brackets}))
+    summary = {
+        "mins": mins, "efficiency": eff, "brackets": brackets, "amplify": AMPLIFY
+    }
+    record("scaling_ops", f"{hi}/{SF_DIR.rsplit('sf', 1)[-1]}/1", summary)
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

@@ -16,7 +16,8 @@ Resume: run_resumable with wave_size=1 over 16 splits, killed after
 wave 8; the resumed run must process only the remaining splits (<= 1
 split of overhead — here 0, because waves are split-atomic).
 
-Appends a section to BENCH/BASELINE.md and prints one JSON line.
+Records the summary under ``skew`` in BENCH/baseline.json and prints
+it as one JSON line.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPEAT = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "24"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CORES = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
 
@@ -58,7 +59,7 @@ def time_extract(spark, pages, n_splits, hot_hosts, uniform=False):
 
 
 def main() -> None:
-    from bench import pages_parquet, warm_python_workers
+    from bench import pages_parquet, record, warm_python_workers
     from ragflow_spark.session import get_spark
     from ragflow_spark.plans.pipeline import compute_hot_hosts
 
@@ -131,49 +132,7 @@ def main() -> None:
         },
     }
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # replace any prior Skew/Resume sections in place instead of
-    # blind-appending duplicates (re-measurement is the common case)
-    path = os.path.join(REPO, "BENCH", "BASELINE.md")
-    try:
-        import re as _re
-
-        parts = _re.split(r"(?m)^(?=## )", open(path).read())
-        kept = parts[0] + "".join(
-            sec
-            for sec in parts[1:]
-            if not sec.startswith("## Skew robustness")
-            and not sec.startswith("## Resume overhead")
-        )
-        with open(path, "w") as f:
-            f.write(kept.rstrip() + "\n")
-    except OSError:
-        pass
-    with open(path, "a") as f:
-        f.write(
-            f"""
-## Skew robustness (one host = ~30% of pages, local[{CORES}], {docs:,} pages)
-
-| split strategy | extract wall (median of {RUNS}, s) |
-|---|---|
-| uniform url-hash (balanced upper bound) | {med['uniform']:.2f} |
-| host-hash, no salting (straggler case)  | {med['unsalted']:.2f} |
-| host-hash + size-proportional salting   | {med['salted']:.2f} |
-
-**Salted throughput = {robustness:.3f}x the unskewed upper bound**
-(target >= 0.8: {"PASS" if robustness >= 0.8 else "FAIL"}); unsalted
-reaches only {unsalted_ratio:.3f}x.
-
-## Resume overhead (sf0.001, 16 splits, wave_size=1, killed after 8)
-
-Killed run parsed {per_run.get('killed', 0)} docs, resumed run parsed
-{per_run.get('resumed', 0)}, total input {n_pages}: **{reparsed} docs
-re-parsed** (target <= 1 split = ~{n_pages // 16} docs:
-{"PASS" if reparsed <= n_pages / 16 + 1 else "FAIL"}). Waves are
-split-atomic parquet overwrites, so a kill mid-wave re-parses exactly
-that wave on resume.
-"""
-        )
+    record("skew", f"{CORES}/{summary['sf']}/1", summary)
     print(json.dumps(summary))
     spark.stop()
 

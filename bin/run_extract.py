@@ -11,7 +11,7 @@ Cluster usage (north_rule deployment mode):
         bin/run_extract.py \
         --input  <pages table path (parquet/iceberg)> \
         --output <output dir> --run-id run1 \
-        --n-splits 4096 --salt-factor 16 --wave-size 256
+        --n-splits 4096 --wave-size 256
 
 Local sandbox usage (drives the same code path):
 
@@ -27,8 +27,8 @@ path with the (url, warc_ts, html, text, lang) schema.
 
 Sizing guidance for 10^12 docs (SURVEY.md §4.2): n_splits >= 16x total
 executor cores so AQE and the resume grain both have headroom; wave
-size = one cluster-full of tasks; salt_factor >= (largest host's page
-share) * n_splits so no split exceeds ~2x the median.
+size = one cluster-full of tasks. Hot hosts get size-proportional salt
+factors from the pre-pass, so no split exceeds ~1x its fair share.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-splits", type=int, default=64)
-    ap.add_argument("--salt-factor", type=int, default=8)
     ap.add_argument("--wave-size", type=int, default=8)
     ap.add_argument("--token-budget", type=int, default=256)
     ap.add_argument("--cores", type=int, default=None)
@@ -94,7 +93,6 @@ def main() -> None:
         args.output,
         run_id=args.run_id,
         n_splits=args.n_splits,
-        salt_factor=args.salt_factor,
         wave_size=args.wave_size,
         budget=args.token_budget,
         hot_host_sample=args.hot_host_sample,

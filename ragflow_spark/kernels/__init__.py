@@ -30,8 +30,6 @@ from ragflow_spark.kernels.htmlx import html_extract  # noqa: F401
 from ragflow_spark.kernels.pdfx import pdf_extract  # noqa: F401
 from ragflow_spark.kernels.chunk import (  # noqa: F401
     chunk_naive,
-    chunk_book,
-    chunk_paper,
     choose_template,
     num_tokens,
 )

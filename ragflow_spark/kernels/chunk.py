@@ -385,34 +385,6 @@ def chunk_naive(
     )] if text else []
 
 
-def chunk_book(
-    text: str,
-    section_kinds: list[str],
-    section_texts: list[str],
-    budget: int = DEFAULT_TOKEN_BUDGET,
-) -> list[tuple[int, int]]:
-    """Hierarchical chunking: a new unit starts at each heading of
-    level <= BOOK_SPLIT_LEVEL; units are budget-split internally."""
-    return [
-        (a, b) for a, b, _c in _book_spans3(text, section_kinds, section_texts, budget)
-    ]
-
-
-def chunk_paper(
-    text: str,
-    section_kinds: list[str],
-    section_texts: list[str],
-    budget: int = DEFAULT_TOKEN_BUDGET,
-) -> list[tuple[int, int]]:
-    """Paper-aware chunking (see _paper_spans3)."""
-    return [
-        (a, b)
-        for a, b, _c in _tile3(
-            _paper_spans3(text, section_kinds, section_texts, budget), len(text)
-        )
-    ]
-
-
 PAPER_MIN_HEADINGS = 1
 BOOK_MIN_HEADINGS = 3
 

@@ -142,6 +142,8 @@ def run_resumable(
     """Extract `pages` into out_dir/{extracted,metrics}, resumably.
 
     ``fail_after_waves`` injects a crash for the kill-resume test.
+    ``salt_factor`` only affects list-form ``hot_hosts``, which the
+    pre-pass here never yields.
     ``hot_host_sample``: seeded sampling rate for the hot-host
     pre-pass; the default 'auto' samples at 1% when the optimizer
     estimates the input above ~1 GiB and stays exact below (so crawl

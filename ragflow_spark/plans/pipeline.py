@@ -44,7 +44,6 @@ from ragflow_spark.schemas import EXTRACTED
 
 DEFAULT_N_SPLITS = 64
 DEFAULT_SALT_FACTOR = 8
-HOT_HOST_FRACTION = 0.05  # host with > 5% of pages is "hot" -> salted
 HOT_HOST_SAMPLE_RATE = 0.01
 # inputs estimated above this take the sampled pre-pass by default: a
 # crawl shard is TBs (sampling is mandatory there); test/golden inputs
@@ -82,17 +81,15 @@ def host_of(col):
 
 def compute_hot_hosts(
     pages: DataFrame,
-    fraction: float = HOT_HOST_FRACTION,
-    n_splits: int | None = None,
+    n_splits: int,
     sample: float | str | None = None,
 ) -> dict[str, int]:
     """Cheap pre-pass: per-host salt factors, SIZE-PROPORTIONAL.
 
     Reads only the url column (column pruning keeps the scan tiny even
     when html is TBs). A host whose page share exceeds one split's
-    fair share (1/n_splits, floored at `fraction` when n_splits is
-    None) gets salt factor ceil(share * n_splits) so no single split
-    ends up larger than ~1x the target — this is what keeps stragglers
+    fair share (1/n_splits) gets salt factor ceil(share * n_splits) so
+    no single split ends up larger than ~1x the target — this keeps stragglers
     bounded when one host owns 30% of a crawl. Deterministic for a
     given input (and a given `sample` seed).
 
@@ -112,7 +109,7 @@ def compute_hot_hosts(
     total = pages.count()
     if total == 0:
         return {}
-    target = (total / n_splits) if n_splits else (total * fraction)
+    target = total / n_splits
     rows = (
         pages.select(host_of(F.col("url")).alias("host"))
         .groupBy("host")
