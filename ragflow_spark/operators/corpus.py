@@ -445,9 +445,6 @@ def pii_redact_stats(spark, sf_dir):
 # segment; here doc_id % 10 partitions the same table reproducibly.
 _COMMITTED_MOD = 7  # doc_id % 10 < 7 -> committed (~70%), else new
 
-# Shared by dedup_incremental and its bloom-prefiltered twin: the
-# Bloom is a pruning layer, not a semantics change, so both queries
-# answer to the identical oracle.
 _DEDUP_INCREMENTAL_ORACLE = f"""
     WITH committed AS (
       SELECT DISTINCT md5(text) AS h FROM documents
@@ -511,12 +508,6 @@ def dedup_incremental(spark, sf_dir):
     flagged = new_docs.join(committed, "h", "left").withColumn(
         "dup_vs_committed", F.coalesce("in_committed", F.lit(False))
     )
-    return _rollup_incremental(flagged)
-
-
-def _rollup_incremental(flagged):
-    """Per-source rollup over (source, h, dup_vs_committed) rows —
-    shared by dedup_incremental and its bloom-prefiltered twin."""
     return flagged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_new"),
         F.sum(F.col("dup_vs_committed").cast("long")).alias("dup_vs_committed"),
@@ -528,64 +519,6 @@ def _rollup_incremental(flagged):
             - F.countDistinct(F.when(~F.col("dup_vs_committed"), F.col("h")))
         ).alias("dup_within_new"),
     )
-
-
-@register("dedup_incremental_bloom", oracle=_DEDUP_INCREMENTAL_ORACLE)
-def dedup_incremental_bloom(spark, sf_dir):
-    """dedup_incremental with the production pre-filter: a Bloom
-    filter built over the committed digests prunes the arriving batch
-    BEFORE the exact join. Bloom-negative docs are provably absent
-    from the committed corpus — they never reach the join (flagged
-    not-dup directly); only bloom-positives (true dups + ~1% false
-    positives) join, and the exact join resolves the FPs, so the
-    result — and the oracle — is identical to dedup_incremental.
-
-    Scale shape: at 10^12 committed + 10^9/day arriving with ~1% real
-    dup rate, the exact join's arriving side shrinks ~50x (dups + FP
-    rate); the filter itself is stateless Arrow-vectorized numpy (see
-    operators/bloomfilter.py). The arriving batch is scanned twice
-    (positives branch + negatives branch) — both scans are map-side
-    digest projections; a single-pass variant would persist the probed
-    batch, trading memory for the rescan.
-    """
-    from ragflow_spark.operators.bloomfilter import (
-        build_bloom,
-        might_contain_filter,
-        with_bloom_hashes,
-    )
-
-    d = spread(
-        table(spark, sf_dir, "documents").select(
-            "doc_id", "source", F.md5("text").alias("h")
-        )
-    )
-    committed = d.filter(F.col("doc_id") % 10 < _COMMITTED_MOD).select("h").distinct()
-    # digest-only count: the committed cardinality is snapshot metadata
-    # in production (plans/checkpoint.py), not a scan
-    n_committed = committed.count()
-    bitmap, m_bits = build_bloom(with_bloom_hashes(committed, "h"), n_committed)
-
-    new_docs = with_bloom_hashes(
-        d.filter(F.col("doc_id") % 10 >= _COMMITTED_MOD).select(
-            "doc_id", "source", "h"
-        ),
-        "h",
-    )
-    candidates = might_contain_filter(new_docs, bitmap, m_bits).select(
-        "doc_id", "source", "h"
-    )
-    confirmed = candidates.join(
-        committed.withColumn("in_committed", F.lit(True)), "h", "left"
-    ).select(
-        "source",
-        "h",
-        F.coalesce("in_committed", F.lit(False)).alias("dup_vs_committed"),
-    )
-    negatives = (
-        might_contain_filter(new_docs, bitmap, m_bits, negate=True)
-        .select("source", "h", F.lit(False).alias("dup_vs_committed"))
-    )
-    return _rollup_incremental(confirmed.unionByName(negatives))
 
 
 # --------------------------------------------------------------------------

@@ -9,9 +9,9 @@ do not. The CMS replaces that vocabulary-sized Exchange with a fixed
 d x w int64 grid per input partition: each partition reduces its gram
 stream to one grid row (mapInPandas), and because the sketch is
 LINEAR (sketch(A ∪ B) == sketch(A) + sketch(B), elementwise), the
-per-partition grids sum into the corpus sketch — same merge shape as
-``bloomfilter.build_bloom``, including the staged executor-side fold
-when partitions x grid-bytes would exceed the driver budget.
+per-partition grids sum into the corpus sketch, through a staged
+executor-side fold when partitions x grid-bytes would exceed the
+driver budget.
 
 Guarantee (paper Thm 1): estimate(g) >= true(g) always (one-sided),
 and estimate(g) <= true(g) + (e/w) * N with probability >= 1 - e^-d
@@ -35,7 +35,7 @@ CMS_W = 512  # counters per row
 
 # Driver never collects more than this many grid bytes in one pass;
 # above it an executor-side sum stage folds per-partition grids first
-# (same rationale as BLOOM_DRIVER_COLLECT_BUDGET).
+# (a tree-reduce), so thousands of partitions never cliff the driver.
 CMS_DRIVER_COLLECT_BUDGET = 64 << 20
 
 

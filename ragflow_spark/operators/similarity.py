@@ -813,8 +813,8 @@ _IVF_ORACLE = f"""
 
 def _collect_centroids(spark, sf_dir):
     """Bounded driver-side manifest: the k = n/stride centroid rows
-    (k << corpus), sorted by cent_id so literal-argmax index order ==
-    the oracle's cent_id ASC tie-break."""
+    (k << corpus), sorted by cent_id so argmax index order == the
+    oracle's cent_id ASC tie-break."""
     rows = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % IVF_CENTROID_STRIDE == IVF_CENTROID_PICK)
@@ -859,63 +859,21 @@ def ann_ivf_topk(spark, sf_dir):
     {IVF_CENTROID_STRIDE}th vector is a centroid — partitions the
     corpus into cells by nearest-centroid (cosine); a query probes
     its {IVF_NPROBE} nearest cells and exact-rescores only those
-    candidates. Centroids are a bounded driver-side manifest (k <<
-    corpus): cell assignment is a ROW-LOCAL argmax over normalized
-    centroid literals (like the precomputed LSH planes — no join, no
-    per-vector shuffle), and the query's probe cells are picked
-    driver-side in Python, so the whole plan is scan -> map-side
-    assign + probe filter -> TakeOrderedAndProject. At k beyond a few
-    thousand the literal would be swapped for a numpy matmul against a
-    broadcast centroid matrix inside mapInPandas — same row-local
-    shape, no Exchange either way. At 10^9 vectors the index is
-    written partitioned by cent_id and a query touches nprobe/k of
-    the data — the classic IVF-flat trade-off, with centroids chosen
-    deterministically instead of by k-means so the oracle can replay
-    the exact assignment."""
-    cents = _collect_centroids(spark, sf_dir)
-    qe = _collect_query_vec(spark, sf_dir, QUERY_VEC_ID)
-    qn = math.sqrt(sum(v * v for v in qe))
+    candidates.
 
-    def _cos_q(cid_vec):
-        _cid, vec = cid_vec
-        cn = math.sqrt(sum(v * v for v in vec))
-        return sum(a * b for a, b in zip(qe, vec)) / (qn * cn)
-
-    probe_ids = [
-        cid
-        for cid, _v in sorted(cents, key=lambda cv: (-_cos_q(cv), cv[0]))[
-            :IVF_NPROBE
-        ]
-    ]
-
-    e = spread(table(spark, sf_dir, "embeddings"))
-    cand = (
-        e.withColumn("cent_id", F.expr(_ivf_assign_sql(cents)))
-        .filter(F.col("cent_id").isin(probe_ids))
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-    )
-    cos = F.expr(_cos_vs_literal_sql(qe))
-    return (
-        cand.select("vec_id", "label", F.round(cos, 4).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
-
-
-@register("ann_ivf_topk_bigk", oracle=_IVF_ORACLE)
-def ann_ivf_topk_bigk(spark, sf_dir):
-    """Large-k IVF scale path, same semantics (and same oracle) as
-    `ann_ivf_topk`: when the centroid count outgrows what a SQL
-    literal should carry (k beyond a few thousand — codegen cost grows
-    with expression size), the assignment + probe + rescore becomes
-    ONE vectorized numpy pass inside mapInPandas: scores = E @ Ĉᵀ
-    (normalized centroid matrix shipped in the closure; on a cluster
-    it is a broadcast variable), argmax row = cell id (np.argmax picks
-    the first maximum, replaying the cent_id ASC tie-break because
-    centroids are sorted), probe-cell filter and exact query rescore
-    in the same kernel. Still row-local — no join, no shuffle beyond
-    the final top-k gather; the two paths are differentially tested
-    equal (tests/test_plan_shape.py::test_ann_ivf_paths_agree)."""
+    Centroids are a bounded driver-side manifest (k << corpus); the
+    query's probe cells are picked on the driver. Assignment, probe
+    filter and rescore are ONE vectorized numpy pass inside
+    mapInPandas: scores = E @ Ĉᵀ against the normalized centroid
+    matrix shipped in the closure (a broadcast variable on a
+    cluster), so the plan does not grow with k. np.argmax picks the
+    first maximum, which replays the oracle's cent_id ASC tie-break
+    because centroids are sorted by cent_id. No join, no per-vector
+    shuffle: scan -> map-side kernel -> TakeOrderedAndProject. At
+    10^9 vectors the index is written partitioned by cent_id and a
+    query touches nprobe/k of the data — the classic IVF-flat
+    trade-off, with centroids chosen deterministically instead of by
+    k-means so the oracle can replay the exact assignment."""
     import numpy as np
     import pandas as pd
 
@@ -930,7 +888,7 @@ def ann_ivf_topk_bigk(spark, sf_dir):
 
     qscores = cmat @ qvec  # cosine * qnorm: same ordering
     order = np.lexsort((cids, -qscores))
-    probe_ids = set(int(c) for c in cids[order[:IVF_NPROBE]])
+    probe_ids = cids[order[:IVF_NPROBE]]
 
     def kernel(batches):
         for pdf in batches:
@@ -945,7 +903,7 @@ def ann_ivf_topk_bigk(spark, sf_dir):
                 )
                 continue
             cells = cids[np.argmax(emb @ cmat.T, axis=1)]
-            keep = np.isin(cells, list(probe_ids)) & (
+            keep = np.isin(cells, probe_ids) & (
                 pdf["vec_id"].to_numpy() != QUERY_VEC_ID
             )
             sub = emb[keep]
@@ -1625,8 +1583,8 @@ def ann_ivfpq_topk(spark, sf_dir):
     Scale shape: one vectorized mapInPandas pass — centroids, residual
     codebook and the nprobe ADC tables are closure constants (broadcast
     variables on a cluster); assignment is the same row-local
-    normalized-centroid argmax the ann_ivf family uses (np.argmax
-    first-max == cent_id ASC ties, the bigk precedent), probe filter +
+    normalized-centroid argmax `ann_ivf_topk` uses (np.argmax
+    first-max == cent_id ASC ties), probe filter +
     residual encode + ADC happen in the same kernel, and only
     (vec_id, label, cent_id, adist_sq) reach TakeOrderedAndProject.
     At scale the index is written partitioned by cent_id: a query

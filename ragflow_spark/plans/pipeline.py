@@ -57,13 +57,11 @@ _HOST_RE = r"^[a-z]+://([^/]+)"
 
 
 def resolve_hot_host_sample(
-    pages: DataFrame,
-    sample: float | str | None,
-    auto_threshold_bytes: int = HOT_HOST_AUTO_THRESHOLD_BYTES,
+    pages: DataFrame, sample: float | str | None
 ) -> float | None:
     """'auto' -> {HOT_HOST_SAMPLE_RATE} when Catalyst's size estimate
-    for the input exceeds `auto_threshold_bytes`, else exact (None).
-    The estimate is the optimizer's sizeInBytes statistic — parquet
+    for the input exceeds HOT_HOST_AUTO_THRESHOLD_BYTES, else exact
+    (None). The estimate is the optimizer's sizeInBytes statistic — parquet
     footer totals for file scans, propagated through projections — so
     no data is read to make the decision. At crawl scale (TB inputs)
     this makes the sampled pre-pass the DEFAULT; a two-full-pass exact
@@ -72,7 +70,7 @@ def resolve_hot_host_sample(
     if sample != "auto":
         return sample  # explicit rate or None (exact)
     est = int(pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return HOT_HOST_SAMPLE_RATE if est > auto_threshold_bytes else None
+    return HOT_HOST_SAMPLE_RATE if est > HOT_HOST_AUTO_THRESHOLD_BYTES else None
 
 
 def host_of(col):

@@ -7,15 +7,14 @@ same conf block is what we'd pass to spark-submit on a real cluster.
 Conf rationale (SURVEY.md §4.2, §7.3.4):
 - AQE on: runtime partition coalescing + skew splitting; at 100 TB the
   static shuffle-partition count is always wrong somewhere.
-- Arrow on + bounded maxRecordsPerBatch: html payloads are multi-MB
-  binaries; unbounded Arrow batches would hold GBs per task (Spark has
-  no byte-bounded batching for mapInPandas — maxBytesPerBatch only
-  governs transformWithState). The 256-row default bounds worst-case
-  ~1 MB CC pages at ~256 MB/task; $SPARK_GRAFT_ARROW_BATCH overrides
-  it when the page-size distribution is known (measured local[32],
-  sf0.1 tiny pages, min of 3: 256 -> 7.91 s, 1024 -> 7.43 s, 4096 ->
-  9.88 s — ~6% for 4x the per-task memory ceiling, so the default
-  stays safe rather than fast).
+- Arrow on + bounded batches: html payloads are multi-MB binaries;
+  unbounded Arrow batches would hold GBs per task. Two caps apply to
+  mapInPandas input, whichever binds first. 256 rows: a larger row
+  cap buys nothing on small pages (local[4], 30k docs, min of 4:
+  256 rows 3.19 s vs 4096 rows 3.26 s). 16 MiB: Spark 4.1 cuts a
+  mapInPandas batch at maxBytesPerBatch too, so multi-MB pages
+  arrive a few at a time whatever the row cap
+  (tests/test_session.py).
 - maxPartitionBytes 64 MiB: binary-heavy scans split finer so a
   1000-executor cluster has enough input splits to saturate.
 """
@@ -26,9 +25,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-ARROW_MAX_RECORDS_PER_BATCH = int(
-    os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256")
-)
+ARROW_MAX_RECORDS_PER_BATCH = 256
+ARROW_MAX_BYTES_PER_BATCH = 16 << 20
 
 
 def get_spark(
@@ -37,7 +35,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -51,6 +49,10 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),
+        )
+        .config(
+            "spark.sql.execution.arrow.maxBytesPerBatch",
+            str(ARROW_MAX_BYTES_PER_BATCH),
         )
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")

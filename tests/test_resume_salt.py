@@ -205,10 +205,11 @@ def test_hot_host_sampling_finds_same_hosts(spark, pages):
     assert sampled == compute_hot_hosts(pages, n_splits=16, sample=0.5)
 
 
-def test_hot_host_auto_sample_resolution(spark, pages):
+def test_hot_host_auto_sample_resolution(spark, pages, monkeypatch):
     """'auto' must take the sampled path when the optimizer's input
     size estimate exceeds the threshold and the exact path below it
     (crawl inputs sample by default; test inputs stay exact)."""
+    from ragflow_spark.plans import pipeline
     from ragflow_spark.plans.pipeline import (
         HOT_HOST_SAMPLE_RATE,
         resolve_hot_host_sample,
@@ -217,10 +218,8 @@ def test_hot_host_auto_sample_resolution(spark, pages):
     # tiny input, default (1 GiB) threshold -> exact
     assert resolve_hot_host_sample(pages, "auto") is None
     # same input with a toy threshold models a crawl-sized estimate
-    assert (
-        resolve_hot_host_sample(pages, "auto", auto_threshold_bytes=10)
-        == HOT_HOST_SAMPLE_RATE
-    )
+    monkeypatch.setattr(pipeline, "HOT_HOST_AUTO_THRESHOLD_BYTES", 10)
+    assert resolve_hot_host_sample(pages, "auto") == HOT_HOST_SAMPLE_RATE
     # explicit values pass through untouched
     assert resolve_hot_host_sample(pages, None) is None
     assert resolve_hot_host_sample(pages, 0.25) == 0.25
