@@ -128,14 +128,15 @@ def warm_python_workers(spark, cores: int) -> None:
     """Untimed pre-warm of the Python worker pool.
 
     Each local[N] slot forks a python worker that imports
-    pandas/pyarrow/our kernels on first use (~5-7 s wall for 32
-    concurrent cold imports). On a real cluster executors live for the
-    whole 100 TB job, so steady-state throughput — the thing the
-    scaling criterion is about — excludes that one-time cost; this
-    pass pays it before the timer starts. Importing the kernels also
-    imports ``ragflow_spark``, which installs
-    ``deploy.skip_unchanged_zip_rereads`` in each worker, so later
-    tasks stop re-reading every zip directory on sys.path."""
+    pandas/pyarrow/our kernels on first use (~1.7-2.1 s wall for a
+    fresh local[4] session on a 4-core box, once the daemon loads
+    compiled PySpark; see ragflow_spark/pydaemon.py). On a real
+    cluster executors live for the whole 100 TB job, so steady-state
+    throughput — the thing the scaling criterion is about — excludes
+    that one-time cost; this pass pays it before the timer starts.
+    Importing the kernels also imports ``ragflow_spark``, which
+    installs ``deploy.skip_unchanged_zip_rereads`` in each worker, so
+    later tasks stop re-reading every zip directory on sys.path."""
     import pandas as pd
 
     def touch(batches):

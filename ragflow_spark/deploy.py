@@ -5,7 +5,8 @@ ships it to workers via ``sc.addPyFile`` so kernels imported inside
 pandas UDFs resolve on every executor — the same artifact you would
 pass as ``spark-submit --py-files ragflow_spark.zip job.py`` on a real
 cluster. Idempotent and content-addressed (rebuilds only when sources
-change), so repeated sessions in one sandbox stay cheap.
+change), so repeated sessions on one machine stay cheap. When the
+package itself was imported from a zip, that zip is the artifact.
 
 ``skip_unchanged_zip_rereads()`` runs on every import of the package,
 so in each Python worker that unpickles one of our functions. Before
@@ -38,7 +39,13 @@ def _source_files() -> list[str]:
 
 
 def package_zip() -> str:
+    archive = getattr(__spec__.loader, "archive", None)
+    if archive:
+        # imported from a zip (spark-submit --py-files): ship that zip
+        return os.path.abspath(archive)
     files = _source_files()
+    if not files:
+        raise RuntimeError(f"no package sources under {_PKG_DIR}")
     h = hashlib.sha256()
     for f in files:
         h.update(f.encode())

@@ -116,15 +116,30 @@ def read_extracted_asof(
     return ex.filter(F.col("split_id").isin(sorted(visible)))
 
 
+def _has_data_files(path: str) -> bool:
+    """Whether `path` holds a file Spark reads as data: names starting
+    with ``_`` or ``.`` (``_SUCCESS``, ``_temporary/``, ``.crc``) are
+    not data."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
+
+
 def completed_splits(spark: SparkSession, out_dir: str) -> set[int]:
+    """Split ids that have a metrics row. No metrics directory, or one
+    without a committed data file (only ``_temporary/`` after a crash in
+    the first wave's metrics append), means none, without a Spark read.
+    Any other read error raises: a corrupt manifest must not silently
+    re-extract every split."""
     mpath = os.path.join(out_dir, "metrics")
-    try:
-        return {
-            r["split_id"]
-            for r in spark.read.parquet(mpath).select("split_id").distinct().collect()
-        }
-    except Exception:
+    if not _has_data_files(mpath):
         return set()
+    return {
+        r["split_id"]
+        for r in spark.read.parquet(mpath).select("split_id").distinct().collect()
+    }
 
 
 def run_resumable(
