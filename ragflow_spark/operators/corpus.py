@@ -57,6 +57,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ragflow_spark.operators.registry import input_bytes, register, spread, table
+from ragflow_spark.operators.textops import doc_words
+from ragflow_spark.sources.pages import SKEWED_HOST, host_col
 
 SEG_WORDS = 3  # C4 uses three-sentence spans; word-soup docs -> 3-word spans
 
@@ -67,6 +69,20 @@ SEG_WORDS = 3  # C4 uses three-sentence spans; word-soup docs -> 3-word spans
 # executor broadcast limits.
 SEG_DUP_BROADCAST_MAX_BYTES = 256 << 20
 TOP2_FLAG_THRESHOLD = 0.20  # Gopher: docs with top-2-gram char fraction > 0.20
+
+
+def seg_spans(text):
+    """Non-overlapping SEG_WORDS-word spans of ``text`` (split on single
+    spaces, last span short) as an array Column: the one Spark-side
+    segmentation every span query shares. Oracle twin: ``unnest(range(
+    (len(ws) + SEG_WORDS - 1) // SEG_WORDS))`` over ``string_split``."""
+    words = F.split(text, " ")
+    n_seg = F.floor((F.size(words) + F.lit(SEG_WORDS - 1)) / SEG_WORDS).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), n_seg - 1),
+        lambda i: F.array_join(F.slice(words, i * SEG_WORDS + 1, SEG_WORDS), " "),
+    )
+
 
 # 32-bit md5 prefix per document, folded with bit_xor: O(1) agg state.
 _SIG_SQL = "bit_xor(('0x' || substr(md5(doc_id || ':' || {col}), 1, 8))::BIGINT)"
@@ -259,14 +275,8 @@ def segment_dedup(spark, sf_dir):
         input_bytes(raw) or SEG_DUP_BROADCAST_MAX_BYTES + 1
     ) <= SEG_DUP_BROADCAST_MAX_BYTES
     d = spread(raw)
-    words = F.split(F.col("text"), " ")
-    n_seg = F.floor((F.size(words) + F.lit(SEG_WORDS - 1)) / SEG_WORDS).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_seg - 1),
-        lambda i: F.array_join(F.slice(words, i * SEG_WORDS + 1, SEG_WORDS), " "),
-    )
     ex = d.select(
-        "doc_id", "source", F.posexplode(segs).alias("pos", "seg")
+        "doc_id", "source", F.posexplode(seg_spans("text")).alias("pos", "seg")
     ).withColumn("h", F.md5("seg"))
 
     dup = (
@@ -710,13 +720,7 @@ def url_normalize_stats(spark, sf_dir):
     """
     d = spread(table(spark, sf_dir, "documents").select("doc_id"))
     doc_id = F.col("doc_id")
-    host = F.when(doc_id % 10 < 3, F.lit("big.example.com")).otherwise(
-        F.concat(
-            F.lit("site"),
-            F.lpad((doc_id % 50).cast("string"), 2, "0"),
-            F.lit(".example.org"),
-        )
-    )
+    host = host_col(doc_id)
     clean = F.concat(F.lit("https://"), host, F.lit("/doc-"), doc_id.cast("string"))
     messy = F.concat(
         F.when(doc_id % 5 == 0, F.lit("HTTPS://")).otherwise(F.lit("https://")),
@@ -822,7 +826,7 @@ def bigram_stream(docs):
     """(doc_id, gram) rows: word bigrams of lower(text) — the shared
     gram stream for the exact heavy-hitter plan and the count-min
     twin (operators/countmin.py)."""
-    w = F.split(F.lower(F.col("text")), " ")
+    w = doc_words()
     return docs.filter(F.size(w) >= 2).select(
         "doc_id",
         F.explode(
@@ -1160,28 +1164,18 @@ def _robots_rules(spark, sf_dir):
     hosts = (
         table(spark, sf_dir, "documents")
         .select(
-            F.when(
-                F.col("doc_id") % 10 < 3, F.lit("big.example.com")
-            )
-            .otherwise(
-                F.concat(
-                    F.lit("site"),
-                    F.lpad((F.col("doc_id") % 50).cast("string"), 2, "0"),
-                    F.lit(".example.org"),
-                )
-            )
-            .alias("host")
+            host_col(F.col("doc_id")).alias("host")
         )
         .distinct()
     )
     return hosts.select(
         "host",
-        F.when(F.col("host") == "big.example.com", F.lit("/doc-3"))
+        F.when(F.col("host") == SKEWED_HOST, F.lit("/doc-3"))
         .otherwise(
             F.concat(F.lit("/doc-"), (nn % 10).cast("string"))
         )
         .alias("disallow_prefix"),
-        F.when(F.col("host") == "big.example.com", F.lit(1))
+        F.when(F.col("host") == SKEWED_HOST, F.lit(1))
         .otherwise(F.lit(1) + nn % 5)
         .alias("crawl_delay_s"),
     )
@@ -1305,16 +1299,7 @@ def fetch_schedule(spark, sf_dir):
     (makespan, not partition size, is the skewed host's real cost:
     the schedule says so via crawl_delay * n)."""
     docs = spread(table(spark, sf_dir, "documents").select("doc_id"))
-    host = (
-        F.when(F.col("doc_id") % 10 < 3, F.lit("big.example.com"))
-        .otherwise(
-            F.concat(
-                F.lit("site"),
-                F.lpad((F.col("doc_id") % 50).cast("string"), 2, "0"),
-                F.lit(".example.org"),
-            )
-        )
-    )
+    host = host_col(F.col("doc_id"))
     frontier = docs.select(
         "doc_id",
         host.alias("host"),
@@ -1365,6 +1350,13 @@ def fetch_schedule(spark, sf_dir):
 BOILER_NUM, BOILER_DEN = 1, 4
 # host_boilerplate_table refuses to collect a table this large
 BOILER_TABLE_CAP = 100_000
+
+
+def _is_boiler():
+    """The boilerplate rule over (present, host_docs) columns: the span
+    is in >= BOILER_NUM/BOILER_DEN of the host's docs."""
+    present, host_docs = F.col("present"), F.col("host_docs")
+    return present * F.lit(BOILER_DEN) >= host_docs * F.lit(BOILER_NUM)
 
 
 @register(
@@ -1420,8 +1412,8 @@ def host_boilerplate_stats(spark, sf_dir):
     """Host-level frequent-span boilerplate detection — the CCNet /
     RefinedWeb corpus-side filter ("discard lines repeated across a
     site") that complements the per-page tag/text-density heuristics
-    the extraction kernel runs: a {SEG_WORDS}-word span (the
-    segment_dedup segmentation, shared constant) is BOILERPLATE on a
+    the extraction kernel runs: a {SEG_WORDS}-word span (`seg_spans`,
+    the segment_dedup segmentation) is BOILERPLATE on a
     host when it appears in at least {BOILER_NUM}/{BOILER_DEN} of
     that host's documents — nav bars, cookie banners, and footers hit
     this on every real site while body text never does. Output per
@@ -1454,18 +1446,8 @@ def host_boilerplate_stats(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    words = F.split(F.col("text"), " ")
-    n_seg = F.floor(
-        (F.size(words) + F.lit(SEG_WORDS - 1)) / SEG_WORDS
-    ).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_seg - 1),
-        lambda i: F.array_join(
-            F.slice(words, i * SEG_WORDS + 1, SEG_WORDS), " "
-        ),
-    )
     ex = d.select(
-        "doc_id", "source", F.explode(segs).alias("seg")
+        "doc_id", "source", F.explode(seg_spans("text")).alias("seg")
     ).withColumn("h", F.md5("seg"))
     occ = ex.groupBy("source", "h").agg(
         F.count(F.lit(1)).cast("bigint").alias("occ"),
@@ -1474,10 +1456,7 @@ def host_boilerplate_stats(spark, sf_dir):
     hd = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("host_docs")
     )
-    boiler = (
-        F.col("present") * F.lit(BOILER_DEN)
-        >= F.col("host_docs") * F.lit(BOILER_NUM)
-    )
+    boiler = _is_boiler()
     sigv = F.conv(F.substring("h", 1, 15), 16, 10).cast("long")
     flagged = occ.join(F.broadcast(hd), "source").select(
         "source",
@@ -1512,18 +1491,8 @@ def host_boilerplate_table(docs) -> dict[str, frozenset[str]]:
     so a host contributes at most BOILER_DEN * (spans per page)
     digests regardless of corpus size (site chrome, not body text);
     a loud cap enforces that assumption."""
-    words = F.split(F.col("text"), " ")
-    n_seg = F.floor(
-        (F.size(words) + F.lit(SEG_WORDS - 1)) / SEG_WORDS
-    ).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_seg - 1),
-        lambda i: F.array_join(
-            F.slice(words, i * SEG_WORDS + 1, SEG_WORDS), " "
-        ),
-    )
     ex = docs.select(
-        "doc_id", "source", F.explode(segs).alias("seg")
+        "doc_id", "source", F.explode(seg_spans("text")).alias("seg")
     ).withColumn("h", F.md5("seg"))
     occ = ex.groupBy("source", "h").agg(
         F.countDistinct("doc_id").alias("present")
@@ -1531,10 +1500,7 @@ def host_boilerplate_table(docs) -> dict[str, frozenset[str]]:
     hd = docs.groupBy("source").agg(F.count(F.lit(1)).alias("host_docs"))
     flagged = (
         occ.join(F.broadcast(hd), "source")
-        .filter(
-            F.col("present") * F.lit(BOILER_DEN)
-            >= F.col("host_docs") * F.lit(BOILER_NUM)
-        )
+        .filter(_is_boiler())
         .select("source", "h")
     )
     # the bound is enforced by the collect itself: limit(CAP) never

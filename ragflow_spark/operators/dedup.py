@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ragflow_spark.operators.registry import register, spread, table
+from ragflow_spark.operators.textops import doc_words
 
 N_HASHES = 8  # minhash signature length
 N_BANDS = 4  # bands of r=2 rows each
@@ -58,7 +59,7 @@ def dedup_exact(spark, sf_dir):
 
 def _spark_shingles(text_col):
     """3-word shingles as an array column (no UDF)."""
-    words = F.split(F.lower(text_col), " ")
+    words = doc_words(text_col)
     return F.transform(
         F.sequence(F.lit(0), F.size(words) - 3),
         lambda i: F.concat_ws(
@@ -157,8 +158,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     Output = colliding (band, bucket) groups; the pair join happens in
     `neardup_jaccard`. All generator expressions — zero UDFs."""
     d = _spread(table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.col("text")), " ")
-    sh = d.filter(F.size(words) >= 3).select(
+    sh = d.filter(F.size(doc_words()) >= 3).select(
         "doc_id", _spark_shingles(F.col("text")).alias("sh")
     )
     sig = sh.select(
@@ -220,8 +220,7 @@ def neardup_jaccard(spark, sf_dir):
     shuffle is the scarce resource at crawl scale). Plan-shape-tested:
     no array column enters any Exchange."""
     d = _spread(table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.col("text")), " ")
-    docs = d.filter(F.size(words) >= 3).select("doc_id", "text")
+    docs = d.filter(F.size(doc_words()) >= 3).select("doc_id", "text")
     sig = docs.select(
         "doc_id",
         _spark_shingle_digests(
@@ -999,8 +998,7 @@ def neardup_containment(spark, sf_dir):
     tie-break) and reports both scores so the containment-vs-jaccard
     gap is auditable."""
     d = _spread(table(spark, sf_dir, "documents"))
-    words = F.split(F.lower(F.col("text")), " ")
-    docs = d.filter(F.size(words) >= 3).select("doc_id", "text")
+    docs = d.filter(F.size(doc_words()) >= 3).select("doc_id", "text")
     anchors = (
         docs.select(
             "doc_id",

@@ -202,10 +202,16 @@ def hopping_event_counts(spark, sf_dir):
     `F.window(ts, '1 hour', '30 minutes')`; the oracle materializes
     the same two window starts per event arithmetically."""
     e = table(spark, sf_dir, "events")
+    return window_counts(e, F.window("ts", "1 hour", "30 minutes"))
+
+
+def window_counts(events, window):
+    """(window_start, event_type, n, total_value) per ``window`` (an
+    ``F.window`` Column) and event type: the aggregate the hopping
+    batch query and the streaming tumbling twin
+    (streaming/windows.py) share."""
     return (
-        e.groupBy(
-            F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type"
-        )
+        events.groupBy(window.alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("total_value"),

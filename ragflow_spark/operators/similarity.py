@@ -19,11 +19,28 @@ import math
 from pyspark.sql import functions as F
 
 from ragflow_spark.operators.registry import register, spread, table
+from ragflow_spark.operators.textops import doc_words
 
 QUERY_VEC_ID = 0
 TOP_K = 10
 N_PLANES = 8
 DIM = 64
+
+
+def cosine(a, b):
+    """Cosine of two numeric array Columns, computed in double as the
+    oracles' ``::DOUBLE[]`` casts do (float32 products drift
+    otherwise). The one Spark-side exact-cosine formula: JVM-side
+    zip_with/aggregate, no UDF."""
+
+    def inner(x, y):
+        return F.aggregate(
+            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+
+    return inner(a, b) / (F.sqrt(inner(a, a)) * F.sqrt(inner(b, b)))
 
 
 @register(
@@ -52,25 +69,7 @@ def cosine_topk(spark, sf_dir):
         F.broadcast(q)
     )
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm(a):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    cos = dot(F.col("embedding"), F.col("qe")) / (
-        norm(F.col("embedding")) * norm(F.col("qe"))
-    )
+    cos = cosine(F.col("embedding"), F.col("qe"))
     return (
         joined.select("vec_id", "label", F.round(cos, 4).alias("cos"))
         .orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -381,7 +380,7 @@ def cite_insertion(spark, sf_dir):
     task, not every scored (sentence x chunk) pair."""
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.array_distinct(F.split(F.lower(F.col("text")), " ")).alias("toks"),
+        F.array_distinct(doc_words()).alias("toks"),
     )
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     side = spread(d.join(e, d.doc_id == e.vec_id)).select(
@@ -403,25 +402,7 @@ def cite_insertion(spark, sf_dir):
     union = F.size("stoks") + F.size("ctoks") - inter
     tok_sim = inter * F.lit(1.0) / F.greatest(union, F.lit(1))
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    vec_sim = dot(F.col("svec"), F.col("cvec")) / (
-        norm(F.col("svec")) * norm(F.col("cvec"))
-    )
+    vec_sim = cosine(F.col("svec"), F.col("cvec"))
     hybrid = F.lit(TK_WEIGHT) * tok_sim + F.lit(VT_WEIGHT) * vec_sim
 
     scored = j.select(
@@ -608,23 +589,7 @@ def neardup_embedding(spark, sf_dir):
     )
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
 
-    def dot(a, c):
-        return F.aggregate(
-            F.zip_with(a, c, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda p: p.cast("double") * p.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    cos = dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb")))
+    cos = cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.withColumn("cos_raw", cos)
         .filter(F.col("cos_raw") >= NEARDUP_COS_THRESHOLD)
@@ -704,7 +669,7 @@ def hybrid_retrieval_topk(spark, sf_dir):
     only (vec_id, vsim) doubles cross the doc_id<->vec_id join
     Exchange, never embeddings."""
     d = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("tk")
+        "doc_id", doc_words().alias("tk")
     )
     def _match(t):
         # closure, NOT a default-arg lambda: F.filter treats a
@@ -894,13 +859,6 @@ def ann_ivf_topk(spark, sf_dir):
         for pdf in batches:
             emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if emb.size == 0:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.array([], dtype=np.int64),
-                        "label": np.array([], dtype=np.int32),
-                        "cos_raw": np.array([], dtype=np.float64),
-                    }
-                )
                 continue
             cells = cids[np.argmax(emb @ cmat.T, axis=1)]
             keep = np.isin(cells, probe_ids) & (
@@ -997,22 +955,6 @@ def semdedup(spark, sf_dir):
         F.expr(_ivf_assign_sql(cents)).alias("cent_id"),
     )
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda p: p.cast("double") * p.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
     a = assigned.select(
         F.col("vec_id").alias("va"),
         F.col("embedding").alias("ea"),
@@ -1023,9 +965,7 @@ def semdedup(spark, sf_dir):
         F.col("embedding").alias("eb"),
         F.col("cent_id").alias("cent_b"),
     )
-    cos = _dot(F.col("ea"), F.col("eb")) / (
-        _norm(F.col("ea")) * _norm(F.col("eb"))
-    )
+    cos = cosine(F.col("ea"), F.col("eb"))
     dropped = (
         a.join(
             b,
@@ -1177,28 +1117,8 @@ def ivf_kmeans_refine(spark, sf_dir):
         "cent_id bigint, cvec array<double>, svec array<double>",
     )
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(c, lambda p: p * p),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-
-    cos = _dot(F.col("embedding"), F.col("cvec")) / (
-        _norm(F.col("embedding")) * _norm(F.col("cvec"))
-    )
-    drift = _dot(F.col("svec"), F.col("cvec")) / (
-        _norm(F.col("svec")) * _norm(F.col("cvec"))
-    )
+    cos = cosine(F.col("embedding"), F.col("cvec"))
+    drift = cosine(F.col("svec"), F.col("cvec"))
     return (
         final.join(F.broadcast(cdf), "cent_id")
         .groupBy("cent_id")
@@ -1357,13 +1277,6 @@ def ann_pq_topk(spark, sf_dir):
         for pdf in batches:
             emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if emb.size == 0:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.array([], dtype=np.int64),
-                        "label": np.array([], dtype=np.int32),
-                        "adist_sq": np.array([], dtype=np.int64),
-                    }
-                )
                 continue
             codes, _resid = _pq_encode(emb, cb3)
             adist = dt[codes, np.arange(PQ_M)[None, :]].sum(axis=1)
@@ -1417,15 +1330,6 @@ def pq_encode_stats(spark, sf_dir):
         for pdf in batches:
             emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if emb.size == 0:
-                yield pd.DataFrame(
-                    {
-                        "subspace": np.array([], dtype=np.int64),
-                        "code": np.array([], dtype=np.int64),
-                        "n": np.array([], dtype=np.int64),
-                        "sig": np.array([], dtype=np.int64),
-                        "resid": np.array([], dtype=np.int64),
-                    }
-                )
                 continue
             codes, resid = _pq_encode(emb, cb3)
             b = codes.shape[0]
@@ -1640,14 +1544,6 @@ def ann_ivfpq_topk(spark, sf_dir):
         for pdf in batches:
             emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if emb.size == 0:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.array([], dtype=np.int64),
-                        "label": np.array([], dtype=np.int32),
-                        "cent_id": np.array([], dtype=np.int64),
-                        "adist_sq": np.array([], dtype=np.int64),
-                    }
-                )
                 continue
             rows_assign = np.argmax(emb @ cnorm.T, axis=1)
             keep = np.isin(rows_assign, probe_rows) & (

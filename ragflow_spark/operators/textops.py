@@ -22,6 +22,39 @@ _WS_CHARS = r" \t\n\x0B\f\r"
 # same class of regex both engines support identically.
 TOKEN_PATTERN = rf"[A-Za-z0-9_]+|[^A-Za-z0-9_{_WS_CHARS}]"
 
+
+def doc_words(text="text"):
+    """Lowercase words split on single spaces — the word array every
+    word-level query derives from its text (the oracles' twin is
+    ``str_split(lower(text), ' ')``)."""
+    return F.split(F.lower(text), " ")
+
+
+def text_fp(text):
+    """Content fingerprint: md5 of WS_CLASS-collapsed lowercase text."""
+    return F.md5(F.lower(F.regexp_replace(text, WS_CLASS + "+", " ")))
+
+
+def quality(text):
+    """Quality score in [0, 1] from length, punctuation and stopword
+    ratios (weights frozen; the oracles' twin is ``_QUALITY_SQL``)."""
+    n_words = F.size(F.split(text, " "))
+    len_score = F.least(n_words / F.lit(400.0), F.lit(1.0))
+    punct = F.regexp_count(text, F.lit(r"[^A-Za-z0-9 ]"))
+    punct_score = F.lit(1.0) - F.least(
+        punct * F.lit(1.0) / F.greatest(F.length(text), F.lit(1)), F.lit(1.0)
+    )
+    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
+    stop = F.regexp_count(padded, F.lit(r"[ ](the|and|of|a|to)[ ]"))
+    stop_score = F.least(
+        stop * F.lit(10.0) / F.greatest(n_words, F.lit(1)), F.lit(1.0)
+    )
+    return F.round(
+        F.lit(0.4) * len_score + F.lit(0.3) * punct_score + F.lit(0.3) * stop_score,
+        4,
+    )
+
+
 # tiny deterministic stopword sets for the language-ID heuristic
 _LANG_MARKERS = {
     "en": ["the", "and", "of"],
@@ -148,22 +181,7 @@ def quality_score(spark, sf_dir):
     """Quality scoring from length / punctuation / stopword ratios
     (round brief; weights frozen). All arithmetic in Column ops."""
     d = table(spark, sf_dir, "documents")
-    text = F.col("text")
-    n_words = F.size(F.split(text, " "))
-    len_score = F.least(n_words / F.lit(400.0), F.lit(1.0))
-    punct = F.regexp_count(text, F.lit(r"[^A-Za-z0-9 ]"))
-    punct_score = F.lit(1.0) - F.least(
-        punct * F.lit(1.0) / F.greatest(F.length(text), F.lit(1)), F.lit(1.0)
-    )
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    stop = F.regexp_count(padded, F.lit(r"[ ](the|and|of|a|to)[ ]"))
-    stop_score = F.least(
-        stop * F.lit(10.0) / F.greatest(n_words, F.lit(1)), F.lit(1.0)
-    )
-    score = F.round(
-        F.lit(0.4) * len_score + F.lit(0.3) * punct_score + F.lit(0.3) * stop_score,
-        4,
-    )
+    score = quality(F.col("text"))
     bucket = (
         F.when(score >= 0.5, "good").when(score >= 0.25, "fair").otherwise("poor")
     )
@@ -187,7 +205,7 @@ def fingerprint(spark, sf_dir):
     agent/component/baidufanyi.py:73,84). Whitespace is the explicit
     WS_CLASS so Spark (Java regex) and the oracle (RE2) agree on \\x0B."""
     d = table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace(F.col("text"), WS_CLASS + "+", " ")))
+    fp = text_fp(F.col("text"))
     return d.select("doc_id", fp.alias("fp")).orderBy("doc_id").limit(100)
 
 
@@ -210,7 +228,7 @@ def keyword_topn(spark, sf_dir):
     tf top-n'). Explode -> count -> global top-20, ties by word."""
     d = table(spark, sf_dir, "documents")
     words = d.select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
+        F.explode(doc_words()).alias("word")
     ).filter(F.length("word") > 3)
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
     return (
@@ -444,27 +462,10 @@ def clean_features(d):
     whitespace-normalized lowercase text), quality score, token count.
     One projection; every regex evaluated once per row."""
     text = F.col("text")
-    n_words = F.size(F.split(text, " "))
-    len_score = F.least(n_words / F.lit(400.0), F.lit(1.0))
-    punct = F.regexp_count(text, F.lit(r"[^A-Za-z0-9 ]"))
-    punct_score = F.lit(1.0) - F.least(
-        punct * F.lit(1.0) / F.greatest(F.length(text), F.lit(1)), F.lit(1.0)
-    )
-    padded = F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-    stop = F.regexp_count(padded, F.lit(r"[ ](the|and|of|a|to)[ ]"))
-    stop_score = F.least(
-        stop * F.lit(10.0) / F.greatest(n_words, F.lit(1)), F.lit(1.0)
-    )
-    score = F.round(
-        F.lit(0.4) * len_score
-        + F.lit(0.3) * punct_score
-        + F.lit(0.3) * stop_score,
-        4,
-    )
     return d.select(
         "doc_id",
-        F.md5(F.lower(F.regexp_replace(text, WS_CLASS + "+", " "))).alias("fp"),
-        score.alias("score"),
+        text_fp(text).alias("fp"),
+        quality(text).alias("score"),
         F.regexp_count(text, F.lit(TOKEN_PATTERN)).alias("toks"),
     )
 
@@ -591,10 +592,7 @@ def inverted_index_stats(spark, sf_dir):
     so query-side lookups are single-bucket scans; the final top-k is
     TakeOrdered, no global sort."""
     tok = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.posexplode(F.split(F.lower(F.col("text")), " ")).alias(
-            "pos", "term"
-        ),
+        "doc_id", F.posexplode(doc_words()).alias("pos", "term")
     )
     postings = tok.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).alias("tf"),
@@ -702,7 +700,7 @@ def _bm25_contribs(spark, sf_dir):
     reliable-checkpoint / cached-index boundary); corpus stats, df,
     and the query map fold back broadcast."""
     docs = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
+        "doc_id", doc_words().alias("toks")
     )
     dl = docs.select(
         "doc_id", F.size("toks").cast("bigint").alias("dl"), "toks"
@@ -900,8 +898,7 @@ def posting_compress_stats(spark, sf_dir):
     posting reduction is map-side combinable; the per-term rollup
     ships one row per container."""
     tok = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
+        "doc_id", F.explode(doc_words()).alias("term")
     )
     postings = tok.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).alias("_c")
@@ -1030,7 +1027,7 @@ def best_passage_snippets(spark, sf_dir):
         "query_id long, term string",
     )
     docs = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", F.split(F.lower(F.col("text")), " ").alias("s")
+        "doc_id", doc_words().alias("s")
     )
     # winners only: |Q| x TOP_DOCS rows — broadcast onto the doc scan
     winner_docs = docs.join(

@@ -66,6 +66,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ragflow_spark.operators.registry import register, spread, table
+from ragflow_spark.operators.similarity import cosine
+from ragflow_spark.operators.textops import doc_words
 
 # decontamination: n-gram width (GPT-3 used 13-grams over BPE tokens;
 # the word-soup corpus has ~10-80 word docs, so 8 keeps every doc
@@ -278,37 +280,7 @@ def pack_sequences(spark, sf_dir):
     local order — padding each shard's tail. Per-source is the
     driver-checkable semantic twin of that plan.
     """
-    L = PACK_SEQ_LEN
-    d = spread(table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
-    toks = d.select(
-        "source", "doc_id", F.size(F.split(F.col("text"), " ")).cast("long").alias("nt")
-    )
-    w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cb = F.coalesce(F.sum("nt").over(w), F.lit(0))
-    per_doc = toks.select(
-        "source",
-        "nt",
-        cb.alias("cb"),
-    )
-    total = F.sum("nt")
-    n_seq = F.floor((total + F.lit(L - 1)) / L)
-    return per_doc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        total.alias("total_tokens"),
-        n_seq.alias("n_sequences"),
-        F.sum(
-            (
-                F.floor((F.col("cb") + F.col("nt") - 1) / L)
-                > F.floor(F.col("cb") / L)
-            ).cast("long")
-        ).alias("n_split_docs"),
-        (n_seq * L - total).alias("pad_tokens"),
-        F.round((n_seq * L - total) * F.lit(1.0) / (n_seq * L), 4).alias(
-            "pad_frac"
-        ),
-    )
+    return _pack(spark, sf_dir, F.lit(0).cast("long")).drop("n_shards")
 
 
 # --------------------------------------------------------------------------
@@ -375,13 +347,22 @@ def pack_sequences_sharded(spark, sf_dir):
     (in production, one input split). The Exchange ships (source,
     doc_id, nt, shard) scalars; text is dropped at the scan.
     """
+    return _pack(spark, sf_dir, (F.col("doc_id") % PACK_SHARDS).cast("long"))
+
+
+def _pack(spark, sf_dir, shard):
+    """The packing body both forms share: the cum-sum window per
+    (source, ``shard``) in doc_id order, per-shard sequence and
+    boundary-crossing counts, then the per-source rollup with each
+    shard's ragged-tail padding. A constant ``shard`` is the global
+    per-source form."""
     d = spread(table(spark, sf_dir, "documents").select("doc_id", "source", "text"))
     L = PACK_SEQ_LEN
     toks = d.select(
         "source",
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("nt"),
-        (F.col("doc_id") % PACK_SHARDS).cast("long").alias("shard"),
+        shard.alias("shard"),
     )
     w = (
         Window.partitionBy("source", "shard")
@@ -785,21 +766,10 @@ def label_centroid_similarity(spark, sf_dir):
     a = cvec.select(F.col("label").alias("label_a"), F.col("cvec").alias("va"))
     b = cvec.select(F.col("label").alias("label_b"), F.col("cvec").alias("vb"))
     pairs = a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_a = F.sqrt(
-        F.aggregate("va", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    norm_b = F.sqrt(
-        F.aggregate("vb", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
     return pairs.select(
         "label_a",
         "label_b",
-        F.round(dot / (norm_a * norm_b), 4).alias("cos_sim"),
+        F.round(cosine(F.col("va"), F.col("vb")), 4).alias("cos_sim"),
     )
 
 
@@ -1227,7 +1197,7 @@ def minhash_decontaminate(spark, sf_dir):
     )
 
     d = spread(table(spark, sf_dir, "documents")).select(
-        "doc_id", "source", F.split(F.lower(F.col("text")), " ").alias("w0")
+        "doc_id", "source", doc_words().alias("w0")
     )
     bench_rows = (
         d.filter(F.col("doc_id") % EVAL_DOC_MOD == 0)
@@ -1489,7 +1459,7 @@ def bpe_merge_induction(spark, sf_dir):
     ('a a a a' merges to 'aa aa', not 'aa a a'; verified
     cross-engine). Integer counts throughout: no float tie risk."""
     d = spread(table(spark, sf_dir, "documents")).select(
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
+        F.explode(doc_words()).alias("word")
     )
     vocab = (
         d.groupBy("word")

@@ -301,32 +301,32 @@ def chunks_of(extracted: DataFrame) -> DataFrame:
 def metrics_for(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-split lineage rows (SURVEY.md §1.2 metrics schema).
 
-    Declarative aggregation — no second pass over html. failure_codes
-    is a real MAP<INT,BIGINT> (vs the reference's JSON-in-string
-    convention, SURVEY.md §1.2)."""
-    base = extracted.groupBy("split_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum((F.col("parse_status") == "ok").cast("long")).alias("n_ok"),
-        F.sum((F.col("parse_status") != "ok").cast("long")).alias("n_failed"),
+    One aggregation, no join: rows fold to (split, status, code)
+    counts, then to one row per split, so the extracted rows are read
+    once. failure_codes is a real MAP<INT,BIGINT> (vs the reference's
+    JSON-in-string convention, SURVEY.md §1.2), null for a split with
+    no failures."""
+    by_code = extracted.groupBy("split_id", "parse_status", "parse_code").agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("extract_ms").alias("wall_ms"),
     )
-    codes = (
-        extracted.filter(F.col("parse_code") != 0)
-        .groupBy("split_id", "parse_code")
-        .count()
-        .groupBy("split_id")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("parse_code"), F.col("count")))
-                )
-            ).alias("failure_codes")
-        )
+    ok = F.col("parse_status") == "ok"
+    failed = F.collect_list(
+        F.when(F.col("parse_code") != 0, F.struct("parse_code", F.col("n")))
+    )
+    base = by_code.groupBy("split_id").agg(
+        F.sum("n").alias("n_docs"),
+        F.sum(F.when(ok, F.col("n")).otherwise(0)).alias("n_ok"),
+        F.sum(F.when(~ok, F.col("n")).otherwise(0)).alias("n_failed"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("wall_ms").alias("wall_ms"),
+        F.when(
+            F.size(failed) > 0, F.map_from_entries(F.sort_array(failed))
+        ).alias("failure_codes"),
     )
     return (
-        base.join(codes, "split_id", "left")
-        .withColumn("partition_id", F.col("split_id"))
+        base.withColumn("partition_id", F.col("split_id"))
         .withColumn("salt", F.lit(None).cast("int"))
         .withColumn(
             "input_split", F.concat(F.lit("split-"), F.col("split_id").cast("string"))

@@ -1,4 +1,8 @@
-"""Explicit StructTypes for every table (SURVEY.md §1.2).
+"""Explicit StructTypes for the extraction output (SURVEY.md §1.2):
+``EXTRACTED`` is the row format ``extract_pages`` returns, with its
+chunks as an array of ``CHUNK``. The pages schema lives beside its
+generator (``sources.pages.PAGES_SCHEMA``); the metrics rows take
+their types from ``plans.pipeline.metrics_for``.
 
 The reference is schemaless pandas (object dtype everywhere,
 reference agent/component/base.py:385-407); we pin columnar schemas —
@@ -7,16 +11,6 @@ instead of the reference's JSON-in-string convention (SURVEY.md §1.1).
 """
 
 from pyspark.sql import types as T
-
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 CHUNK = T.StructType(
     [
@@ -45,34 +39,5 @@ EXTRACTED = T.StructType(
         T.StructField("bytes_in", T.LongType(), False),
         T.StructField("split_id", T.IntegerType(), False),
         T.StructField("chunks", T.ArrayType(CHUNK), True),
-    ]
-)
-
-CHUNKS_FLAT = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("chunk_id", T.IntegerType(), False),
-        T.StructField("template", T.StringType(), False),
-        T.StructField("chunk_text", T.StringType(), False),
-        T.StructField("char_start", T.IntegerType(), False),
-        T.StructField("char_end", T.IntegerType(), False),
-        T.StructField("token_count", T.IntegerType(), False),
-    ]
-)
-
-METRICS = T.StructType(
-    [
-        T.StructField("split_id", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("salt", T.IntegerType(), True),
-        T.StructField("input_split", T.StringType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_ok", T.LongType(), False),
-        T.StructField("n_failed", T.LongType(), False),
-        T.StructField("failure_codes", T.MapType(T.IntegerType(), T.LongType()), True),
-        T.StructField("bytes_in", T.LongType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("completed_at", T.TimestampType(), False),
     ]
 )

@@ -157,6 +157,19 @@ def host_for(doc_id: int) -> str:
     return f"site{doc_id % N_HOSTS:02d}.example.org"
 
 
+def host_col(doc_id):
+    """Column twin of ``host_for`` over an integer doc_id Column."""
+    from pyspark.sql import functions as F
+
+    return F.when(doc_id % 10 < 3, F.lit(SKEWED_HOST)).otherwise(
+        F.concat(
+            F.lit("site"),
+            F.lpad((doc_id % N_HOSTS).cast("string"), 2, "0"),
+            F.lit(".example.org"),
+        )
+    )
+
+
 def url_for(doc_id: int) -> str:
     return f"https://{host_for(doc_id)}/doc-{doc_id}"
 

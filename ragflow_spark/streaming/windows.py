@@ -36,21 +36,12 @@ def windowed_counts_stream(
     """Tumbling 1-hour windows with late-data tolerance = `watermark`.
     Same aggregate as the batch `windowed_event_counts` operator, so
     the test can diff streaming output against the batch plan."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "total_value",
-        )
+    # imported here: the streaming package must not pull in the whole
+    # operator registry when a worker unpickles one of its UDFs
+    from ragflow_spark.operators.events import window_counts
+
+    return window_counts(
+        events.withWatermark("ts", watermark), F.window("ts", "1 hour")
     )
 
 

@@ -189,6 +189,31 @@ def test_kill_resume_byte_identical(spark, pages, tmp_path):
     assert m_r.groupBy("split_id").count().filter("count > 1").count() == 0
 
 
+def test_metrics_failure_codes(spark, pages):
+    """metrics_for folds each split's rows once: ok + failed = docs per
+    split, the failure-code map accounts for every failed doc (the
+    corpus's failures are the empty payloads, doc_id % 20 == 9 -> code
+    10), and a split with no failures carries a null map."""
+    from ragflow_spark.kernels.sniff import CODE_EMPTY_PAYLOAD
+    from ragflow_spark.plans.pipeline import (
+        assign_splits,
+        extract_pages,
+        metrics_for,
+    )
+
+    staged = assign_splits(pages, n_splits=16, hot_hosts=[])
+    rows = metrics_for(extract_pages(staged), "m").collect()
+    assert len({r["split_id"] for r in rows}) == len(rows)
+    assert sum(r["n_docs"] for r in rows) == pages.count()
+    assert all(r["n_ok"] + r["n_failed"] == r["n_docs"] for r in rows)
+    n_failed = sum(r["n_failed"] for r in rows)
+    assert n_failed > 0
+    codes = [r["failure_codes"] for r in rows if r["failure_codes"] is not None]
+    assert sum(c.get(CODE_EMPTY_PAYLOAD, 0) for c in codes) == n_failed
+    clean = [r for r in rows if r["n_failed"] == 0]
+    assert clean and all(r["failure_codes"] is None for r in clean)
+
+
 def test_hot_host_sampling_finds_same_hosts(spark, pages):
     """The seeded-sample pre-pass must find the same hot-host SET as
     the exact two-pass mode (the skewed host owns ~30% of pages, far
